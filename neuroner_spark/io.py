@@ -15,6 +15,7 @@ Set NEURONER_TABLE_FORMAT=iceberg (plus a catalog config) to switch.
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -64,25 +65,6 @@ def read_table(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def _ddl_field_names(schema) -> list[str]:
-    """Column names from a DDL string or StructType (top-level commas
-    only — a comma inside ``array<...>``/``map<...>``/``struct<...>``
-    does not split)."""
-    if not isinstance(schema, str):
-        return [f.name for f in schema.fields]
-    names, depth, start = [], 0, 0
-    for i, ch in enumerate(schema + ","):
-        if ch in "<(":
-            depth += 1
-        elif ch in ">)":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            field = schema[start:i].strip()
-            names.append(field.split()[0].strip("`"))
-            start = i + 1
-    return names
-
-
 def local_df(spark: SparkSession, rows, schema) -> DataFrame:
     """Driver rows -> DataFrame as a true LocalRelation (Arrow path).
 
@@ -96,22 +78,36 @@ def local_df(spark: SparkSession, rows, schema) -> DataFrame:
     builds never touch a Python worker, and the optimizer can fold or
     prune the relation.  Use for every driver-built frame on a query
     path (alias dictionaries, union-find results, probe key lists,
-    partition offsets).  Falls back to the classic path only if the
-    pandas conversion is rejected (exotic types).
+    partition offsets).  Falls back to the classic path, with one
+    warning line, only if pandas or Arrow rejects the conversion.
 
-    ``rows``: list of tuples (or an existing pandas DataFrame);
+    ``rows``: an iterable of tuples (or an existing pandas DataFrame);
     ``schema``: DDL string or StructType — names are applied
     positionally, exactly like ``createDataFrame(rows, schema)``.
+    Integer columns holding nulls are built as pandas ``Int64``, so ids
+    of 2**53 and above keep every bit (float64 would round them).
     """
     import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql.types import IntegralType, _parse_datatype_string
 
-    if isinstance(rows, pd.DataFrame):
-        pdf = rows
-    else:
-        pdf = pd.DataFrame(list(rows), columns=_ddl_field_names(schema))
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    if not isinstance(rows, pd.DataFrame):
+        rows = list(rows)
     try:
+        if isinstance(rows, pd.DataFrame):
+            pdf = rows
+        else:
+            pdf = pd.DataFrame(rows, columns=schema.names)
+            for i, f in enumerate(schema.fields):
+                if isinstance(f.dataType, IntegralType) and pdf[f.name].isna().any():
+                    pdf[f.name] = pd.array([r[i] for r in rows], dtype="Int64")
         return spark.createDataFrame(pdf, schema)
-    except Exception:
-        # exotic value types pandas/Arrow refuse — keep the classic
-        # row-pickling path as the correctness fallback
-        return spark.createDataFrame(list(rows) if not isinstance(rows, pd.DataFrame) else rows.itertuples(index=False), schema)
+    except (pa.ArrowException, TypeError, ValueError) as e:
+        logging.getLogger(__name__).warning(
+            "local_df: pandas/Arrow conversion failed (%s); using the row-pickling plan", e
+        )
+        if isinstance(rows, pd.DataFrame):
+            rows = list(rows.itertuples(index=False))
+        return spark.createDataFrame(rows, schema)

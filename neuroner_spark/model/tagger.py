@@ -23,6 +23,7 @@ no per-char loop.
 
 from __future__ import annotations
 
+import threading
 from typing import Iterator
 
 import numpy as np
@@ -210,6 +211,27 @@ def sentences_from_tokens(tokens: DataFrame, n_partitions: int | None = None) ->
     )
 
 
+# the model broadcast of the process's SparkContext, kept for the next
+# call with the same bundle: (SparkContext, bundle, Broadcast)
+_bundle_bc: tuple | None = None
+_bundle_bc_lock = threading.Lock()
+
+
+def _broadcast_bundle(sc, bundle: dict):
+    """One broadcast per bundle object per SparkContext.  A different
+    bundle unpersists the previous broadcast (executors drop their
+    copies) without destroying it: lazy frames built on it may still
+    run, and re-fetch it from the driver."""
+    global _bundle_bc
+    with _bundle_bc_lock:
+        if _bundle_bc is not None and _bundle_bc[0] is sc:
+            if _bundle_bc[1] is bundle:
+                return _bundle_bc[2]
+            _bundle_bc[2].unpersist()
+        _bundle_bc = (sc, bundle, sc.broadcast(bundle))
+        return _bundle_bc[2]
+
+
 def tag_tokens(
     spark: SparkSession,
     tokens: DataFrame,
@@ -225,6 +247,11 @@ def tag_tokens(
     invariant the same way): the tagged output is materialized via
     localCheckpoint, BIOES well-formedness is asserted, and the job
     raises on any violation instead of emitting malformed spans.
+
+    ``bundle`` is treated as immutable: the model is broadcast once per
+    bundle object and reused while the same object comes back, so a
+    caller that changes weights builds a new bundle (training and the
+    tests copy the arrays first) instead of editing this one in place.
     """
     sentences = sentences_from_tokens(tokens)
     if n_partitions is None:
@@ -238,7 +265,7 @@ def tag_tokens(
     # rows here) and benched consistently slower at sf0.1; the
     # assembled-sentence shuffle is row-count-cheap.
     salted = sentences.repartition(n_partitions, F.xxhash64("doc_id", "sent_id"))
-    bundle_bc = spark.sparkContext.broadcast(bundle)
+    bundle_bc = _broadcast_bundle(spark.sparkContext, bundle)
     tagged = salted.mapInPandas(make_tag_fn(bundle_bc, use_crf), schema=TAGGED_SCHEMA)
     if validate:
         from neuroner_spark.functions.tags import bioes_violations

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from neuroner_spark.session import release
+
 MAX_ITER = 50
 
 
@@ -126,6 +128,7 @@ def connected_components(
 
             from neuroner_spark.io import local_df
 
+            release(base)  # the answer below is driver-built
             schema = T.StructType(
                 [
                     T.StructField("node", T.LongType(), False),
@@ -151,39 +154,21 @@ def connected_components(
         ).collect()[0]
         return row["n"], row["h"]
 
-    # per-round checkpoint RELEASE (same discipline as pagerank, r6
-    # session 5): each star round's localCheckpoint pins an edge-sized
-    # frame with no releasable DataFrame handle — a worst-case chain
-    # (40 rounds on the fixture topology) would pin 40 of them.  The
-    # round's registered RDD ids are diffed off the JVM map and the
-    # PREVIOUS round's freed once the new frame is materialized;
-    # ``base`` stays pinned (the singleton join after the loop reads it).
-    jsc = edges.sparkSession.sparkContext._jsc
-
-    def _pinned_ids() -> set:
-        return {int(k) for k in jsc.getPersistentRDDs().keySet().toArray()}
-
-    def _release_ids(ids: set) -> None:
-        live = jsc.getPersistentRDDs()
-        for rid in ids:
-            if live.containsKey(rid):
-                live.get(rid).unpersist(False)
-
     prev_sig = _sig(cur)
-    prev_round_ids: set = set()
     for _i in range(max_iter):
         t0 = time.time()
-        ls = _large_star(cur)
-        before_ids = _pinned_ids()
-        ss = _small_star(ls).localCheckpoint()
+        ss = _small_star(_large_star(cur)).localCheckpoint()
         sig = _sig(ss)
-        _release_ids(prev_round_ids)
-        prev_round_ids = _pinned_ids() - before_ids
+        # the previous round's checkpoint is dead once this one is
+        # materialized; ``base`` (round 0's input) stays pinned because
+        # the singleton join after the loop reads it
+        if _i:
+            release(cur)
+        cur = ss
         if iteration_log is not None:
             iteration_log.append(
                 {"iter": _i, "edges": int(sig[0]), "wall_sec": round(time.time() - t0, 3)}
             )
-        cur = ss
         if sig == prev_sig:
             break
         prev_sig = sig

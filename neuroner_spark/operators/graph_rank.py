@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from neuroner_spark.session import release
+
 
 def pagerank(
     edges: DataFrame,
@@ -48,8 +50,8 @@ def pagerank(
     round's share×edges join re-shuffled all 40M edge rows; a
     persisted frame keeps its outputPartitioning and the joins
     co-partition with ZERO edge exchange per round.  The rank frame is
-    likewise persisted per round (previous round released via its
-    handle — no JVM-map digging needed for persist), and every
+    likewise persisted per round (the previous round is released once
+    the new one is materialized), and every
     ``checkpoint_interval`` rounds it is localCheckpoint()ed instead,
     truncating the logical lineage so analysis cost stays bounded at
     ANY iteration count (the one reshuffle those rounds pay is
@@ -83,24 +85,6 @@ def pagerank(
     ranks = nodes.withColumn("rank", F.lit(1.0 / n)).persist()
     ranks.count()
 
-    # localCheckpoint rounds pin blocks with NO releasable DataFrame
-    # handle (the r5 streaming-leak class; 25 un-released rounds at 5M
-    # nodes OOMed an 8 GB heap) — those rounds' RDD ids are diffed off
-    # the JVM persistent-RDD map and freed one round later
-    jsc = spark.sparkContext._jsc
-
-    def _pinned_ids() -> set:
-        return {int(k) for k in jsc.getPersistentRDDs().keySet().toArray()}
-
-    def _release_ids(ids: set) -> None:
-        live = jsc.getPersistentRDDs()
-        for rid in ids:
-            if live.containsKey(rid):
-                live.get(rid).unpersist(False)
-
-    # seed with the INITIAL rank frame so round 0's release frees it
-    prev_frame = ranks  # previous round's persisted frame (handle release)
-    prev_ck_ids: set = set()  # previous checkpoint round's JVM rdd ids
     for i in range(max_iter):
         t0 = time.time()
         with_deg = ranks.join(out_deg, ranks.node == out_deg.src, "left")
@@ -118,7 +102,6 @@ def pagerank(
             .groupBy(F.col("dst").alias("node"))
             .agg(F.sum("share").alias("inflow"))
         )
-        before_ids = _pinned_ids()
         new_ranks = (
             nodes.join(contribs, "node", "left")
             .crossJoin(F.broadcast(dang_frame))
@@ -148,15 +131,7 @@ def pagerank(
                 .collect()[0][0]
             )
         # the old round fed this round's join (and the delta) — dead now
-        if prev_frame is not None:
-            prev_frame.unpersist(False)
-        _release_ids(prev_ck_ids)
-        if truncate:
-            prev_ck_ids = _pinned_ids() - before_ids
-            prev_frame = None
-        else:
-            prev_ck_ids = set()
-            prev_frame = new_ranks
+        release(ranks)
         ranks = new_ranks
         if iteration_log is not None:
             entry = {"iter": i, "wall_sec": round(time.time() - t0, 3)}
@@ -165,14 +140,9 @@ def pagerank(
             iteration_log.append(entry)
         if delta is not None and delta < tol:
             break
-    # release the static graph frames (r7): the returned rank frame is
-    # already materialized (persisted+counted or checkpointed), so the
-    # edge/node/degree caches pinned for the loop are dead weight after
-    # return — without this every pagerank() call leaked three
-    # persisted frames for the session's lifetime.
-    e.unpersist(False)
-    nodes.unpersist(False)
-    out_deg.unpersist(False)
+    # the returned rank frame is already materialized (persisted+counted
+    # or checkpointed), so the static graph frames are dead after return
+    release(e, nodes, out_deg)
     return ranks
 
 

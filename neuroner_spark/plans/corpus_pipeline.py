@@ -68,6 +68,7 @@ from neuroner_spark.plans.kg_pipeline import (
     _try_resume,
     _write_stage,
 )
+from neuroner_spark.session import release
 
 
 def exact_dedup_keep(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -585,9 +586,8 @@ def run_incremental_snapshot(
         corpus_banded = local_df(
             spark, [], "doc_id long, band_id int, band_hash long"
         )
-    # persist (NOT localCheckpoint): a long-lived driver runs this per
-    # micro-batch, and per-call checkpoint blocks have no releasable
-    # handle — the r5 streaming-leak class.  The banded frame is
+    # lazy persist, not localCheckpoint: the decisions plan's first scan
+    # fills it, so it costs no job of its own.  The banded frame is
     # reused by the decisions plan and the store append, then released;
     # decisions themselves round-trip through their own idempotent
     # partition, so the returned frame is DISK-BACKED and pins nothing.
@@ -615,7 +615,7 @@ def run_incremental_snapshot(
             "overwrite"
         ).parquet(os.path.join(bands_root, f"snapshot={snapshot_id}"))
     finally:
-        banded_new.unpersist(blocking=False)
+        release(banded_new)
     counts = {r["status"]: r["n"] for r in decisions.groupBy("status").agg(F.count("*").alias("n")).collect()}
     return {
         "decisions": decisions,

@@ -46,6 +46,7 @@ from neuroner_spark.functions.tokenize import tokenize
 from neuroner_spark.operators.components import connected_components
 from neuroner_spark.operators.gazetteer import match_mentions
 from neuroner_spark.operators.linking import link_mentions
+from neuroner_spark.session import release
 
 NEAR_WINDOW = 5
 # co_occurs_with pairing is quadratic per doc; cap is far above any
@@ -419,12 +420,9 @@ def triples_from_linked(
     pairing (their same_sentence/near triples — bounded by sentence
     length — are kept); ``co_occurrence_capped_docs`` lists them.
 
-    ``pinned``: a LONG-LIVED caller (the streaming pipeline, once per
-    micro-batch) must pass its release list — the branched frame is
-    then persist()ed and appended so the caller can unpersist it after
-    the batch's writes; the default localCheckpoint pins blocks with
-    NO releasable handle (the r5 streaming-leak class) and is only
-    safe for run-once batch jobs.
+    ``pinned``: the branched mention frame is localCheckpoint()ed and,
+    when a list is given, appended to it so the caller can
+    ``session.release`` it once the triples are written.
 
     ``verb_lexicon`` + ``tokens``: adds the DIRECTED verb-mediated
     predicate family (``verb_triples_from_mentions``) to the output —
@@ -446,11 +444,9 @@ def triples_from_linked(
     # a/b); without materialization every branch re-executes the
     # whole upstream (tokenize -> match -> link — or the tagger) —
     # at 100 TB that is the single worst plan mistake available
+    m = m.localCheckpoint()
     if pinned is not None:
-        m = m.persist()
         pinned.append(m)
-    else:
-        m = m.localCheckpoint()
     # ONE doc-keyed exchange over the materialized frame (r7):
     # localCheckpoint erases partitioning metadata (the physical plan
     # reads back UnknownPartitioning), so without this every branch
@@ -664,6 +660,7 @@ def run_pipeline(
         fp_verbs += ":tc=" + ",".join(
             "|".join(t) for t in sorted(map(tuple, verb_type_constraints))
         )
+    pinned: list[DataFrame] = []
     triples = stage(
         "triples",
         fp_linked + "|" + fp_canon + f"|triples:w={NEAR_WINDOW}:cap={max_entities_per_doc}" + fp_verbs,
@@ -672,6 +669,7 @@ def run_pipeline(
             canon,
             norm.select(F.col("doc_id").alias("url"), "warc_ts"),
             max_entities_per_doc=max_entities_per_doc,
+            pinned=pinned,
             verb_lexicon=verb_lexicon,
             tokens=tokens,
             verb_max_gap=verb_max_gap,
@@ -679,6 +677,7 @@ def run_pipeline(
             verb_type_constraints=verb_type_constraints,
         ),
     )
+    release(*pinned)  # the stage is written and read back from disk
     # skew-cap audit trail: docs excluded from co_occurs_with pairing,
     # materialized with their own manifest (n_rows == capped doc count)
     capped = stage(

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -70,3 +70,21 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def release(*frames: DataFrame) -> None:
+    """Free the executor storage each frame pins, without blocking.
+
+    A ``localCheckpoint()`` result plans as a ``LogicalRDD`` over the
+    checkpointed RDD, which the cache manager never saw, so
+    ``DataFrame.unpersist`` would miss it: that RDD is unpersisted
+    directly.  Any other frame goes through ``unpersist``.  Reading a
+    released checkpoint afterwards fails loudly
+    (``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``); it never returns rows.
+    """
+    for df in frames:
+        plan = df._jdf.queryExecution().logical()
+        if plan.getClass().getSimpleName() == "LogicalRDD":
+            plan.rdd().unpersist(False)
+        else:
+            df.unpersist(blocking=False)

@@ -149,6 +149,7 @@ def run_streaming_pipeline(
         normalize_pages,
         triples_from_linked,
     )
+    from neuroner_spark.session import release
 
     if mention_source == "neural" and bundle is None:
         raise ValueError("mention_source='neural' requires a weight bundle")
@@ -185,23 +186,15 @@ def run_streaming_pipeline(
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        # the persist below pins blocks in executor storage; under a
-        # continuous (non-availableNow) trigger those would accumulate
-        # across micro-batches if left to driver GC — so the pinned
-        # frame is captured and explicitly unpersisted once the
-        # batch's writes are done.  DataFrame.unpersist targets the
-        # SAME cached plan that persist() registered; the previous
-        # localCheckpoint + df.rdd.unpersist pairing did NOT
-        # (DataFrame.rdd builds a fresh, never-persisted RDD, so the
-        # checkpointed blocks leaked).  Eager pinning isn't required
-        # here — the first action (the rejects write) populates the
-        # cache for the accepted-side reuse.
+        # what a batch pins (the gate frame, the triples' mention
+        # checkpoint) is released once its writes are done: under a
+        # continuous (non-availableNow) trigger it would otherwise
+        # accumulate across micro-batches
         pinned: list[DataFrame] = []
         try:
             _run_batch(batch_df, batch_id, pinned)
         finally:
-            for df in pinned:
-                df.unpersist(blocking=False)
+            release(*pinned)
 
     def _run_batch(batch_df: DataFrame, batch_id: int, pinned: list) -> None:
         if min_quality is not None or benchmark is not None or dedup_store_dir is not None:
@@ -238,9 +231,7 @@ def run_streaming_pipeline(
                     # pair/star-edge unions trip Catalyst's Union
                     # constraint rewrite (key-not-found on a pruned
                     # attribute) when the micro-batch's cloned-session
-                    # lineage flows into them, and localCheckpoint
-                    # would pin blocks with no releasable handle (the
-                    # r5 streaming-leak lesson).  Overwrite of the
+                    # lineage flows into them.  Overwrite of the
                     # batch's own path = retry-idempotent like every
                     # sink here.
                     intake = os.path.join(
@@ -318,9 +309,6 @@ def run_streaming_pipeline(
             mentions = match_mentions(tokens, alias_dict)
         linked = link_mentions(mentions, alias_dict, use_fuzzy=False)
         meta = norm.select(F.col("doc_id").alias("url"), "warc_ts")
-        # pinned= threads the branched mention frame into this batch's
-        # release list — triples_from_linked's default localCheckpoint
-        # would pin one unreleasable RDD PER MICRO-BATCH
         triples = triples_from_linked(
             linked, batch_canon, meta, pinned=pinned,
             verb_lexicon=verb_lexicon, tokens=tokens,

@@ -33,8 +33,6 @@ def main() -> None:
     sc = spark.sparkContext
     from pyspark.sql import functions as F
 
-    # job listener via the status tracker is racy; use the scheduler's
-    # event log instead: poll statusTracker after each leg
     import pandas as _pd
 
     n_workers = 32 if cpus == "*" else int(cpus)
@@ -45,33 +43,13 @@ def main() -> None:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     docs.count()
 
-    class PyListener:
-        """Collect (job_id, wall, description) via SparkListener."""
-
-        def __init__(self):
-            self.jobs = []
-            self._start = {}
-
-        def onJobStart(self, e):
-            self._start[e.jobId()] = (time.time(), "")
-
-        def onJobEnd(self, e):
-            s = self._start.pop(e.jobId(), None)
-            if s is not None:
-                self.jobs.append((e.jobId(), round(time.time() - s[0], 3)))
-
-        class Java:
-            implements = ["org.apache.spark.scheduler.SparkListenerInterface"]
-
-    # the py4j callback-server listener route is heavyweight; simpler:
-    # use statusTracker job ids before/after and read job info walls
-    tracker = sc.statusTracker
-
+    # a leg's jobs are read from the status tracker by job group; it
+    # forgets old jobs past spark.ui.retainedJobs, so n_jobs is a
+    # lower bound on long runs
     def run_leg(name, fn, repeats=3):
         best = None
         best_jobs = None
         for _ in range(repeats):
-            before = set(sc.statusTracker().getJobIdsForGroup(None) or [])
             sc.setJobGroup(name, name)
             t0 = time.time()
             fn()

@@ -22,6 +22,32 @@ def test_predict_returns_entities(spark):
     assert out == out2
 
 
+def _storage_bytes(spark) -> int:
+    """Block-manager memory in use across executors, read from the
+    status store once the listener bus has delivered every block
+    update."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    execs = sc.statusStore().executorList(True)
+    return sum(execs.apply(i).memoryUsed() for i in range(execs.size()))
+
+
+def test_predict_broadcasts_the_model_once(spark):
+    """Predicts with one bundle reuse its broadcast: storage memory
+    after five calls stays within one bundle of the first call's."""
+    from neuroner_spark.api import predict
+    from neuroner_spark.model.weights import make_bundle
+
+    bundle = make_bundle(1 << 16, seed=42)
+    size = sum(a.nbytes for a in bundle["arrays"].values())
+    text = "Alice met Bob in Paris. Bob left!"
+    first = predict(spark, text, bundle)
+    level = _storage_bytes(spark)
+    for _ in range(4):
+        assert predict(spark, text, bundle) == first
+    assert _storage_bytes(spark) - level < size
+
+
 def test_config_defaults_and_ini(tmp_path):
     cfg = load_parameters()
     assert cfg.use_crf and cfg.tagging_format == "bioes" and cfg.seed == 42

@@ -68,6 +68,24 @@ def test_cc_driver_fast_path_matches_star_loop(spark):
     assert len(log_dist) >= 1 and "mode" not in log_dist[0]
 
 
+def test_cc_releases_what_its_result_does_not_read(spark, new_pinned):
+    """The driver fast path frees its edge checkpoint; the star loop
+    frees every round's checkpoint but the last, which its result
+    still reads along with the edge checkpoint."""
+    import random
+
+    nodes = list(range(200))
+    random.Random(0).shuffle(nodes)
+    chain = spark.createDataFrame(list(zip(nodes, nodes[1:])), "src long, dst long")
+    assert {r["component"] for r in connected_components(chain).collect()} == {0}
+    assert not new_pinned(0)
+    log: list = []
+    loop = connected_components(chain, iteration_log=log, small_threshold=0)
+    assert {r["component"] for r in loop.collect()} == {0}
+    assert len(log) >= 3
+    assert len(new_pinned(2)) <= 2
+
+
 def _merge(spark, prior_rows, edge_rows):
     from neuroner_spark.operators.components import merge_canonical_snapshots
 
@@ -232,6 +250,18 @@ def test_pagerank_matches_numpy_power_iteration(spark):
     for i in range(n):
         assert abs(got[i] - r[i]) < 1e-9, (i, got[i], r[i])
     assert log and log[-1]["l1_delta"] < 1e-9  # converged, logged
+
+
+def test_pagerank_releases_rounds_and_static_frames(spark, new_pinned):
+    """Persisted and checkpointed rounds alike are freed once the next
+    round is materialized, and the static graph frames on return: only
+    the returned (checkpointed) last round stays pinned."""
+    from neuroner_spark.operators.graph_rank import pagerank
+
+    edges = spark.createDataFrame([(0, 1), (1, 2), (2, 0), (2, 3)], "src long, dst long")
+    ranks = pagerank(edges, checkpoint_interval=2, max_iter=6, tol=0)
+    assert abs(sum(r["rank"] for r in ranks.collect()) - 1.0) < 1e-9
+    assert len(new_pinned(1)) <= 1
 
 
 def test_pagerank_undirected_symmetry(spark):

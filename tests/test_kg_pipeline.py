@@ -52,6 +52,15 @@ def test_resume_skips_stages(spark, pipeline_out):
     assert t1 == t2
 
 
+def test_run_pipeline_releases_its_pins(spark, tmp_path, new_pinned):
+    """Every frame a batch run returns reads its stage back from disk,
+    so nothing the run pinned (the triples' mention checkpoint, the
+    canonical map's edge checkpoint) may stay pinned after it."""
+    res = run_pipeline(spark, pages_df(spark, 50), alias_df(spark), str(tmp_path / "kg"))
+    assert res["triples"].count() > 0
+    assert not new_pinned(0)
+
+
 def test_canonical_map_distributed_fallback_parity(spark):
     """small_threshold=0 forces the distributed connected-components
     branch; its mapping must equal the driver union-find path's."""

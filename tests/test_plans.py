@@ -81,3 +81,49 @@ def test_tokenize_projects_before_arrow(spark):
     read = plan.split("ReadSchema: ", 1)[1].splitlines()[0]
     # only (doc_id, text) of the 5 document columns crosses into Arrow
     assert "doc_id" in read and "text" in read and "lang" not in read, read
+
+
+def test_minhash_band_pairs_are_equi_joins(spark):
+    """Near-dup pair generation must stay equi-join only: a cartesian
+    or nested-loop join in the pair path is quadratic at corpus scale."""
+    from neuroner_spark.operators.dedup import band_pairs_from_banded, minhash_banded
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    plan = _plan(band_pairs_from_banded(minhash_banded(docs), 1000))
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+
+
+def test_contamination_broadcasts_the_eval_set(spark):
+    from neuroner_spark.plans.catalog_text import q_dedup_contamination
+
+    assert "BroadcastHashJoin" in _plan(q_dedup_contamination(spark, SF))
+
+
+def test_kg_triples_executed_doc_keyed_shuffles(spark):
+    """Count the doc-keyed shuffles the kg triples stage really runs:
+    the final adaptive plan, read after the action, shows a reused
+    exchange as ``ReusedExchange`` and each shuffle that ran as its
+    own ``Exchange hashpartitioning(doc_id``.  Five copies of the
+    doc-keyed repartition are planned; two reuse an earlier one."""
+    from neuroner_spark.functions.tokenize import tokenize
+    from neuroner_spark.operators.gazetteer import match_mentions
+    from neuroner_spark.operators.linking import link_mentions
+    from neuroner_spark.plans.catalog_kg import _aliases
+    from neuroner_spark.plans.kg_pipeline import canonical_map, triples_from_linked
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet").select(
+        F.col("doc_id").cast("string").alias("url"),
+        F.lit(None).cast("timestamp").alias("warc_ts"),
+        "text",
+    )
+    aliases = _aliases(spark)
+    tokens = tokenize(docs.withColumnRenamed("url", "doc_id"))
+    linked = link_mentions(match_mentions(tokens, aliases), aliases, use_fuzzy=False)
+    triples = triples_from_linked(linked, canonical_map(aliases), docs)
+    assert triples.collect()
+    final = _plan(triples).split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final
+    doc_shuffles = [l for l in final.splitlines() if "Exchange hashpartitioning(doc_id" in l]
+    ran = [l for l in doc_shuffles if "ReusedExchange" not in l]
+    assert (len(ran), len(doc_shuffles) - len(ran)) == (3, 2), final

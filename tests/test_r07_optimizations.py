@@ -136,7 +136,7 @@ def test_local_df_localrelation_and_parity(spark):
     the empty-frame and None-row shapes the callers rely on."""
     import pandas as pd
 
-    from neuroner_spark.io import _ddl_field_names, local_df
+    from neuroner_spark.io import local_df
 
     rows = [("a", 1, 0.5), ("b", 2, None)]
     ddl = "name string, n long, score double"
@@ -158,12 +158,49 @@ def test_local_df_localrelation_and_parity(spark):
         (1, "u"),
         (2, "v"),
     ]
-    # nested-type DDL name parsing must not split on inner commas
-    assert _ddl_field_names("cell int, centroid array<double>, m map<string,int>") == [
-        "cell",
-        "centroid",
-        "m",
-    ]
+    # nested-type DDL: inner commas do not split the column list
+    nested = local_df(
+        spark, [(1, [0.5], {"k": 2})], "cell int, centroid array<double>, m map<string,int>"
+    )
+    assert nested.columns == ["cell", "centroid", "m"]
+    assert nested.collect()[0]["m"] == {"k": 2}
+
+
+def test_local_df_fallback_reads_a_generator_once(spark, monkeypatch, caplog):
+    """When pandas/Arrow refuses the rows, local_df says so in one
+    warning line and builds the frame from the rows it already read:
+    a generator input is not re-read (and found empty) on that path."""
+    import logging
+
+    import pandas as pd
+    import pyarrow as pa
+
+    from neuroner_spark.io import local_df
+
+    real = spark.createDataFrame
+
+    def arrow_refuses(data, schema=None, *args, **kwargs):
+        if isinstance(data, pd.DataFrame):
+            raise pa.ArrowInvalid("refused")
+        return real(data, schema, *args, **kwargs)
+
+    monkeypatch.setattr(spark, "createDataFrame", arrow_refuses)
+    rows = [("a", 1), ("b", 2)]
+    with caplog.at_level(logging.WARNING, logger="neuroner_spark.io"):
+        got = local_df(spark, (r for r in rows), "name string, n long")
+    assert sorted(map(tuple, got.collect())) == rows
+    assert [r.levelname for r in caplog.records if r.name == "neuroner_spark.io"] == ["WARNING"]
+
+
+def test_local_df_null_bearing_long_keeps_every_bit(spark):
+    """A long column holding nulls must not round-trip through float64:
+    2**53 + 1 is not representable there."""
+    from neuroner_spark.io import local_df
+
+    big = (1 << 53) + 1
+    got = local_df(spark, [(big, "x"), (None, "y")], "id long, tag string")
+    assert got.isLocal()
+    assert sorted(got.collect(), key=lambda r: r["tag"]) == [(big, "x"), (None, "y")]
 
 
 def test_tokenize_ascii_vector_path_parity(spark):
