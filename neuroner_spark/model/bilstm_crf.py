@@ -6,8 +6,18 @@ tanh FF 100 → class scores C+2 → CRF) and decodes with
 ``tf.contrib.crf.viterbi_decode`` one sentence at a time
 (``src/train.py :: prediction_step``).  The reference's batch size is
 1; this module is the engine's main perf win: every op is batched
-across ALL sentences in an Arrow batch ([B,T,...] arrays), and the
-Viterbi DP loops over time only — never over sentences.
+across ALL sentences in an Arrow batch, and every loop runs over time
+only — never over sentences.
+
+Inference takes padded [B,T,...] arrays but computes real tokens only.
+``_pack`` orders the sentences longest first and lays the N real
+tokens out time-major, so the rows still running at step t are a
+prefix of length n_t.  The input projection, the FF layer and the
+output layer are one [N,·] matmul each; each recurrent step runs on
+its n_t active rows; the scores are scattered back to [B,T,C+2] once
+for the Viterbi DP.  The char encoder runs the same packed recurrence
+over the characters of each word.  Training's BPTT (``_lstm_cache``)
+stays padded and masked.
 
 Pure numpy, no Spark imports — unit-testable in isolation and callable
 from the mapInPandas tagger (model/tagger.py).
@@ -24,57 +34,96 @@ def _sigmoid(x):
     return 1.0 / (1.0 + np.exp(-x))
 
 
-def _lstm(x, lengths, W, U, b, hidden, reverse=False):
-    """Batched single-direction LSTM.
+def _pack(lengths):
+    """Time-major packed layout of a ragged batch (PyTorch's
+    ``PackedSequence``): rows ordered longest first, so the rows still
+    running at step t are a prefix of length n_t, and step t's packed
+    slots are ``[start_t, start_t + n_t)`` in that order.
 
-    x: [B,T,D] float32; lengths: [B] int; returns h_seq [B,T,H] (zeros
-    past each length) and h_last [B,H] (state at the last valid step).
-    Gate packing order: i, f, o, g — the three sigmoid gates contiguous
-    so one vectorized sigmoid covers [B,3H] (pinned; goldens freeze it).
+    lengths: [B] int, any order, zeros allowed.  Returns (rows, cols,
+    steps): packed slot k holds padded position (rows[k], cols[k]), and
+    steps is the list of (start_t, n_t) for t = 0..max(lengths)-1.
+    Computed once per batch and shared by both directions and the
+    layers above them.
     """
-    B, T, D = x.shape
-    h = np.zeros((B, hidden), dtype=np.float32)
-    c = np.zeros((B, hidden), dtype=np.float32)
-    h_seq = np.zeros((B, T, hidden), dtype=np.float32)
-    h_last = np.zeros((B, hidden), dtype=np.float32)
-    # hoist the input projection out of the recurrence: one [B*T,D]@[D,4H]
-    # sgemm instead of T small ones (the recurrent h@U is all that's
-    # inherently sequential) — 3-4x faster at these shapes
-    xW = (x.reshape(B * T, D) @ W + b).reshape(B, T, 4 * hidden)
-    steps = range(T - 1, -1, -1) if reverse else range(T)
-    for t in steps:
-        z = xW[:, t, :] + h @ U
+    lengths = np.asarray(lengths, dtype=np.int64)
+    order = np.argsort(-lengths, kind="stable")
+    T = int(lengths.max()) if len(lengths) else 0
+    n_t = len(lengths) - np.cumsum(np.bincount(lengths, minlength=T + 1))[:T]
+    starts = np.cumsum(n_t) - n_t
+    cols = np.repeat(np.arange(T), n_t)
+    rows = order[np.arange(len(cols)) - np.repeat(starts, n_t)]
+    return rows, cols, list(zip(starts.tolist(), n_t.tolist()))
+
+
+def _lstm_packed(x, steps, W, U, b, hidden, reverse=False):
+    """Single-direction LSTM over packed rows.
+
+    x: [N,D] packed input; steps: from ``_pack``.  Returns the hidden
+    state of every packed slot, [N,H].  Only real tokens are computed:
+    step t runs ``h[:n_t] @ U`` on the rows still running.  Reversed,
+    the prefix grows as t falls, and rows joining it start from the
+    zero state.
+    Gate packing order: i, f, o, g — the three sigmoid gates contiguous
+    so one vectorized sigmoid covers [n,3H] (pinned; goldens freeze it).
+    """
+    # the input projection is one [N,D]@[D,4H] sgemm outside the
+    # recurrence; only h@U is inherently sequential
+    xW = x @ W + b
+    n0 = steps[0][1] if steps else 0
+    h = np.zeros((n0, hidden), dtype=xW.dtype)
+    c = np.zeros((n0, hidden), dtype=xW.dtype)
+    h_out = np.empty((len(x), hidden), dtype=xW.dtype)
+    for s, n in reversed(steps) if reverse else steps:
+        z = xW[s : s + n] + h[:n] @ U
         gates = _sigmoid(z[:, : 3 * hidden])
         i = gates[:, :hidden]
         f = gates[:, hidden : 2 * hidden]
         o = gates[:, 2 * hidden : 3 * hidden]
         g = np.tanh(z[:, 3 * hidden :])
-        c_new = f * c + i * g
-        h_new = o * np.tanh(c_new)
-        # mask: only update rows whose sequence covers step t
-        if reverse:
-            valid = (lengths > t)[:, None]
-        else:
-            valid = (t < lengths)[:, None]
-        c = np.where(valid, c_new, c)
-        h = np.where(valid, h_new, h)
-        h_seq[:, t, :] = np.where(valid, h_new, 0.0)
-        if reverse:
-            at_last = (t == 0) & (lengths > 0)
-        else:
-            at_last = lengths == (t + 1)
-        h_last[at_last] = h_new[at_last]
+        c[:n] = f * c[:n] + i * g
+        h[:n] = o * np.tanh(c[:n])
+        h_out[s : s + n] = h[:n]
+    return h_out
+
+
+def _lstm(x, lengths, W, U, b, hidden, reverse=False):
+    """Padded-layout view of ``_lstm_packed``.
+
+    x: [B,T,D]; lengths: [B] int; returns h_seq [B,T,H] (zeros past
+    each length) and h_last [B,H] (state at the last valid step: step
+    len-1 forward, step 0 reversed; zeros for an empty sequence).
+    """
+    B, T, _ = x.shape
+    rows, cols, steps = _pack(lengths)
+    hp = _lstm_packed(x[rows, cols], steps, W, U, b, hidden, reverse)
+    h_seq = np.zeros((B, T, hidden), dtype=hp.dtype)
+    h_seq[rows, cols] = hp
+    h_last = np.zeros((B, hidden), dtype=hp.dtype)
+    at = cols == 0 if reverse else cols == np.asarray(lengths)[rows] - 1
+    h_last[rows[at]] = hp[at]
     return h_seq, h_last
 
 
 def char_encode(char_ids, word_lengths, arrays):
     """char_ids: [N,W] int (N words, W max chars); word_lengths: [N].
     Returns [N, 2*CHAR_HIDDEN] (fw last ++ bw last) — the reference's
-    character Bi-LSTM word encoding (entity_lstm.py ≈L20–90)."""
-    emb = arrays["char_emb"][char_ids]  # [N,W,25]
-    _, fw_last = _lstm(emb, word_lengths, arrays["char_lstm_fw_W"], arrays["char_lstm_fw_U"], arrays["char_lstm_fw_b"], 25)
-    _, bw_last = _lstm(emb, word_lengths, arrays["char_lstm_bw_W"], arrays["char_lstm_bw_U"], arrays["char_lstm_bw_b"], 25, reverse=True)
-    return np.concatenate([fw_last, bw_last], axis=1)
+    character Bi-LSTM word encoding (entity_lstm.py ≈L20–90).
+
+    Both directions run over the packed characters.  A word's forward
+    last state is its packed slot at step len-1, its backward last
+    state its slot at step 0; an empty word encodes to zeros."""
+    rows, cols, steps = _pack(word_lengths)
+    emb = arrays["char_emb"][char_ids[rows, cols]]  # [n_chars,25]
+    H = arrays["char_lstm_fw_U"].shape[0]
+    fw = _lstm_packed(emb, steps, arrays["char_lstm_fw_W"], arrays["char_lstm_fw_U"], arrays["char_lstm_fw_b"], H)
+    bw = _lstm_packed(emb, steps, arrays["char_lstm_bw_W"], arrays["char_lstm_bw_U"], arrays["char_lstm_bw_b"], H, reverse=True)
+    out = np.zeros((len(word_lengths), 2 * H), dtype=fw.dtype)
+    last = cols == np.asarray(word_lengths)[rows] - 1
+    out[rows[last], :H] = fw[last]
+    first = cols == 0
+    out[rows[first], H:] = bw[first]
+    return out
 
 
 def forward_scores(token_ids, char_ids, lengths, word_lengths, arrays):
@@ -94,6 +143,9 @@ def forward_scores(token_ids, char_ids, lengths, word_lengths, arrays):
 
 def forward_scores_feat(token_ids, char_feat, lengths, arrays):
     """Forward pass with precomputed char features [B,T,2*CHAR_HIDDEN].
+    Returns unary scores [B,T,C+2]: the output layer runs on the packed
+    real tokens, and a padded position holds the score of the padded
+    feature row ``tanh(ff_b)``.
 
     The tagger encodes only the UNIQUE words of each batch through the
     char Bi-LSTM and scatters features back (word surface is the only
@@ -101,20 +153,42 @@ def forward_scores_feat(token_ids, char_feat, lengths, arrays):
     this cuts the char-LSTM work by orders of magnitude vs the
     reference's per-occurrence encoding — bit-identical output).
     """
-    ff = forward_features(token_ids, char_feat, lengths, arrays)
-    return ff @ arrays["out_W"] + arrays["out_b"]  # [B,T,C+2]
+    rows, cols, ff, pad = _packed_features(token_ids, char_feat, lengths, arrays)
+    out_W, out_b = arrays["out_W"], arrays["out_b"]
+    return _unpack(ff @ out_W + out_b, rows, cols, token_ids.shape, pad @ out_W + out_b)
 
 
 def forward_features(token_ids, char_feat, lengths, arrays):
     """Encoder up to the tanh FF layer: [B,T,FF_DIM]. Shared by
     inference (then @ out_W) and output-layer training (fixed
-    features, trainable softmax head — model/train.py)."""
-    tok_emb = arrays["token_emb"][token_ids]  # [B,T,100]
-    x = np.concatenate([tok_emb, char_feat], axis=2)  # [B,T,150]
-    fw_seq, _ = _lstm(x, lengths, arrays["token_lstm_fw_W"], arrays["token_lstm_fw_U"], arrays["token_lstm_fw_b"], 100)
-    bw_seq, _ = _lstm(x, lengths, arrays["token_lstm_bw_W"], arrays["token_lstm_bw_U"], arrays["token_lstm_bw_b"], 100, reverse=True)
-    h = np.concatenate([fw_seq, bw_seq], axis=2)  # [B,T,200]
-    return np.tanh(h @ arrays["ff_W"] + arrays["ff_b"])  # [B,T,100]
+    features, trainable softmax head — model/train.py).  A padded
+    position holds ``tanh(ff_b)``, the FF output of a zero hidden
+    state, as in ``forward_features_cache``."""
+    rows, cols, ff, pad = _packed_features(token_ids, char_feat, lengths, arrays)
+    return _unpack(ff, rows, cols, token_ids.shape, pad)
+
+
+def _packed_features(token_ids, char_feat, lengths, arrays):
+    """Token Bi-LSTM + FF over the packed real tokens of a padded
+    batch.  Returns (rows, cols, ff [N,FF_DIM], pad [FF_DIM]): packed
+    slot k is padded position (rows[k], cols[k]) and pad is the FF
+    output at a padded position."""
+    rows, cols, steps = _pack(lengths)
+    tok_emb = arrays["token_emb"][token_ids[rows, cols]]  # [N,100]
+    x = np.concatenate([tok_emb, char_feat[rows, cols]], axis=1)  # [N,150]
+    H = arrays["token_lstm_fw_U"].shape[0]
+    fw = _lstm_packed(x, steps, arrays["token_lstm_fw_W"], arrays["token_lstm_fw_U"], arrays["token_lstm_fw_b"], H)
+    bw = _lstm_packed(x, steps, arrays["token_lstm_bw_W"], arrays["token_lstm_bw_U"], arrays["token_lstm_bw_b"], H, reverse=True)
+    h = np.concatenate([fw, bw], axis=1)  # [N,200]
+    ff_b = arrays["ff_b"]
+    return rows, cols, np.tanh(h @ arrays["ff_W"] + ff_b), np.tanh(ff_b)
+
+
+def _unpack(packed, rows, cols, shape, pad):
+    """Scatter packed rows [N,K] back to [B,T,K], ``pad`` elsewhere."""
+    out = np.full((*shape, len(pad)), pad, dtype=packed.dtype)
+    out[rows, cols] = packed
+    return out
 
 
 # ---------------------------------------------------------------------
@@ -440,9 +514,7 @@ def viterbi_decode(scores, lengths, transitions):
     """
     B, T, S = scores.shape
     C = N_CLASSES
-    neg = np.float32(-1e30)
     # restrict to real classes; start/end handled via transition rows
-    delta = np.full((B, C), neg, dtype=np.float32)
     delta = scores[:, 0, :C] + transitions[START, :C][None, :]
     backp = np.zeros((B, T, C), dtype=np.int32)
     for t in range(1, T):

@@ -12,9 +12,11 @@ graph one sentence at a time (batch size 1).  Here:
   stage (north_rule skew handling: AQE fixes join skew, NOT UDF-stage
   skew — the salt is mandatory at 10^12 pages).
 - Inside the UDF each Arrow batch (thousands of sentences) is sorted
-  by length and processed in padded sub-batches; encoding and output
-  assembly are numpy-vectorized (the only per-token Python is a
-  ``len()`` sweep and one pandas ``map`` for vocab lookup).
+  by length and cut into sub-batches.  The forward pass packs each
+  sub-batch time-major and computes real tokens only, never padding
+  (``bilstm_crf._pack``); encoding and output assembly are
+  numpy-vectorized (the only per-token Python is a ``len()`` sweep and
+  one pandas ``map`` for vocab lookup).
 
 Char encoding trick: tokens -> fixed-width ``U<W>`` numpy array ->
 ``view(uint32)`` gives the [N, W] codepoint matrix with zero padding,
@@ -179,22 +181,8 @@ def make_tag_fn(bundle_bc, use_crf: bool = True):
     return tag_batches
 
 
-def sentences_from_tokens(tokens: DataFrame, n_partitions: int | None = None) -> DataFrame:
-    """tokens -> one row per sentence with parallel arrays (JVM-side).
-
-    ``n_partitions``: pre-shard the tokens by hash(doc_id, sent_id)
-    into exactly this many partitions BEFORE the aggregation — the
-    groupBy's required clustering is then already satisfied, so the
-    whole sentence assembly runs on ONE exchange and its output stays
-    at ``n_partitions``, balanced per-sentence.  NOTE: ``tag_tokens``
-    deliberately does NOT use this (r7 measurement): the fused shape
-    shuffles every raw token row, while groupBy-then-repartition ships
-    partial-collect_list-compacted rows through the first shuffle and
-    only assembled arrays through the second — consistently faster at
-    sf0.1.  The knob remains for callers whose token stream is already
-    compact."""
-    if n_partitions is not None:
-        tokens = tokens.repartition(n_partitions, "doc_id", "sent_id")
+def sentences_from_tokens(tokens: DataFrame) -> DataFrame:
+    """tokens -> one row per sentence with parallel arrays (JVM-side)."""
     return (
         tokens.groupBy("doc_id", "sent_id")
         .agg(
@@ -255,7 +243,12 @@ def tag_tokens(
     """
     sentences = sentences_from_tokens(tokens)
     if n_partitions is None:
-        n_partitions = spark.sparkContext.defaultParallelism * 2
+        # one Python task per core: each mapInPandas task pays a fixed
+        # ~0.2 CPU-s before it reads a row (the worker's
+        # importlib.invalidate_caches() makes every cached zipimporter
+        # re-read pyspark.zip's directory), so more tasks than cores
+        # add CPU without adding parallelism
+        n_partitions = spark.sparkContext.defaultParallelism
     # salt on the sentence key: sentences of one huge doc (hot host)
     # spread across ALL partitions instead of hot-spotting one task.
     # Kept as a SECOND exchange deliberately (r7 measured the

@@ -10,9 +10,11 @@ the sandbox, so weights are a pure function of a seed
 order) — the golden-output tests freeze the tagger's behavior under
 seed 42.
 
-The bundle is small (a few MB): it is broadcast once per job and read
-inside the Arrow-batched tagger UDF.  ``save``/``load`` give the
-K4-style checkpoint analog (.npz + JSON sidecars).
+The bundle's size is mostly ``token_emb`` (vocab size x 100 float32;
+26 MB for the hashed ``1 << 16`` vocabulary).  ``tag_tokens``
+broadcasts it once per bundle per SparkContext, and the Arrow-batched
+tagger UDF reads it there.  ``save``/``load`` give the K4-style
+checkpoint analog (.npz + JSON sidecars).
 """
 
 from __future__ import annotations

@@ -381,3 +381,79 @@ def test_char_encoder_gradient_check():
             dn[ij] -= eps
             num = (loss({**arrays, name: up}) - loss({**arrays, name: dn})) / (2 * eps)
             assert abs(num - g[ij]) <= 1e-5 * max(1.0, abs(num)), (name, ij, num, g[ij])
+
+
+def _ragged_batch(rng, lengths, W=6, vocab=4):
+    """Random padded inputs for ``lengths`` (any order): token ids,
+    char ids, chars per word (some words empty) and char features."""
+    B, T = len(lengths), int(max(lengths))
+    tok = rng.integers(0, vocab, (B, T))
+    chars = rng.integers(1, 128, (B, T, W))
+    wl = rng.integers(0, W + 1, (B, T))
+    wl[0, 0] = 0  # an empty word inside a real sentence
+    char_feat = rng.normal(0, 0.5, (B, T, 50)).astype(np.float32)
+    return tok, chars, wl, char_feat
+
+
+def test_packed_forward_equals_per_sentence():
+    """Packed inference over an unsorted ragged batch (with an empty
+    sentence and empty words) equals each sentence run alone, and
+    decodes to the same labels."""
+    b = _bundle()
+    arrays = b["arrays"]
+    rng = np.random.default_rng(11)
+    lengths = np.array([3, 7, 0, 1, 7, 4])
+    tok, chars, wl, _ = _ragged_batch(rng, lengths)
+    batch = M.forward_scores(tok, chars, lengths, wl, arrays)
+    pred = M.viterbi_decode(batch, lengths, arrays["crf_transitions"])
+    for i, L in enumerate(lengths):
+        if L == 0:
+            continue
+        single = M.forward_scores(tok[i : i + 1, :L], chars[i : i + 1, :L], lengths[i : i + 1], wl[i : i + 1, :L], arrays)
+        np.testing.assert_allclose(batch[i, :L], single[0], rtol=1e-5, atol=1e-6)
+        want = M.viterbi_decode(single, lengths[i : i + 1], arrays["crf_transitions"])
+        assert pred[i, :L].tolist() == want[0].tolist()
+    # an empty word encodes to zeros in both directions
+    assert not M.char_encode(chars[0, :1], np.array([0]), arrays).any()
+
+
+def test_forward_features_padding_is_tanh_ff_b():
+    """Padded positions of the packed inference features hold exactly
+    tanh(ff_b), the value of a zero hidden state; real positions match
+    the padded, masked training forward."""
+    b = _bundle()
+    arrays = b["arrays"]
+    rng = np.random.default_rng(12)
+    lengths = np.array([2, 5, 0, 4])
+    tok, _, _, char_feat = _ragged_batch(rng, lengths)
+    ff = M.forward_features(tok, char_feat, lengths, arrays)
+    pad = np.arange(ff.shape[1])[None, :] >= lengths[:, None]
+    assert pad.sum() == 9
+    assert (ff[pad] == np.tanh(arrays["ff_b"])).all()
+    ref, _ = M.forward_features_cache(tok, char_feat, lengths, arrays)
+    np.testing.assert_allclose(ff[~pad], ref[~pad], rtol=1e-5, atol=1e-6)
+
+
+def test_tag_tokens_one_task_per_core(spark):
+    """The tagger stage defaults to one partition (one Python task)
+    per core, and its labels do not depend on the partition count."""
+    from neuroner_spark.fixtures.gen import pages_df
+    from neuroner_spark.functions.normalize import normalize_whitespace
+    from neuroner_spark.functions.tokenize import tokenize
+    from neuroner_spark.model.tagger import tag_tokens
+    from pyspark.sql import functions as F
+
+    pages = pages_df(spark, 60).select(
+        F.col("url").alias("doc_id"), normalize_whitespace(F.col("text")).alias("text")
+    )
+    tokens = tokenize(pages)
+    bundle = make_bundle(build_vocab([r["token"] for r in tokens.select("token").collect()]), seed=42)
+    tagged = tag_tokens(spark, tokens, bundle)
+    assert tagged.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+
+    def labels(df):
+        return [r["label"] for r in df.orderBy("doc_id", "sent_id", "pos").collect()]
+
+    got = labels(tagged)
+    assert len(got) == tokens.count()
+    assert got == labels(tag_tokens(spark, tokens, bundle, n_partitions=1))
