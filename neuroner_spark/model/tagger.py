@@ -243,12 +243,11 @@ def tag_tokens(
     """
     sentences = sentences_from_tokens(tokens)
     if n_partitions is None:
-        # one Python task per core: each mapInPandas task pays a fixed
-        # ~0.2 CPU-s before it reads a row (the worker's
-        # importlib.invalidate_caches() makes every cached zipimporter
-        # re-read pyspark.zip's directory), so more tasks than cores
-        # add CPU without adding parallelism
-        n_partitions = spark.sparkContext.defaultParallelism
+        # two Python tasks per core: with no fixed per-task cost left
+        # (worker_daemon stops the zip directory re-read each task paid),
+        # two per core tagged more tokens per CPU-second than one on a
+        # 4-core box (5 of 6 seeds, median +13%)
+        n_partitions = 2 * spark.sparkContext.defaultParallelism
     # salt on the sentence key: sentences of one huge doc (hot host)
     # spread across ALL partitions instead of hot-spotting one task.
     # Kept as a SECOND exchange deliberately (r7 measured the

@@ -486,8 +486,11 @@ def triples_from_linked(
     )
     # one distinct, renamed per side after the agg — the join inputs
     # and the ok_docs count below share the aggregation subtree
-    # (Catalyst exchange reuse keys on the canonicalized plan)
-    de = m.select("doc_id", "ent").distinct()
+    # (Catalyst exchange reuse keys on the canonicalized plan).  The
+    # not-null filter is the one the joins' subj < obj infers, so the
+    # ok_docs copy matches theirs and reuses their doc-keyed shuffle
+    # (canonical ids are never null)
+    de = m.select("doc_id", "ent").filter(F.col("ent").isNotNull()).distinct()
     da = de.select("doc_id", F.col("ent").alias("subj"))
     db = de.select("doc_id", F.col("ent").alias("obj"))
     # skew guard: filtering ONE side of the self-join is enough to kill

@@ -4,6 +4,14 @@ Local-mode defaults mirror what we would set cluster-side: AQE on,
 shuffle partitions sized to cores (not the 200 default), Arrow on for
 the pandas-UDF hot path. On a real cluster only ``master`` and the
 memory knobs change; everything else is scale-independent.
+
+Python workers fork from ``neuroner_spark.worker_daemon``
+(``spark.python.daemon.module``), PySpark's daemon minus the per-task
+re-read of unchanged zip and jar directories.  The daemon starts before
+``addPyFile`` ships anything, so ``neuroner_spark`` must already be on
+the workers' PYTHONPATH: locally the repository root or the driver's
+current directory provides it, as the tagger's workers already
+require; on a cluster, install the package on the executors.
 """
 
 from __future__ import annotations
@@ -61,6 +69,9 @@ def get_spark(
         .config("spark.executorEnv.OMP_NUM_THREADS", "1")
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")
         .config("spark.executorEnv.MKL_NUM_THREADS", "1")
+        # every task would otherwise re-read pyspark.zip's and the
+        # spark-core jar's directories (see worker_daemon)
+        .config("spark.python.daemon.module", "neuroner_spark.worker_daemon")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.host", "127.0.0.1")
         .config("spark.driver.bindAddress", "127.0.0.1")

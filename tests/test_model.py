@@ -434,9 +434,9 @@ def test_forward_features_padding_is_tanh_ff_b():
     np.testing.assert_allclose(ff[~pad], ref[~pad], rtol=1e-5, atol=1e-6)
 
 
-def test_tag_tokens_one_task_per_core(spark):
-    """The tagger stage defaults to one partition (one Python task)
-    per core, and its labels do not depend on the partition count."""
+def test_tag_tokens_two_tasks_per_core(spark):
+    """The tagger stage defaults to two partitions (Python tasks) per
+    core, and its labels do not depend on the partition count."""
     from neuroner_spark.fixtures.gen import pages_df
     from neuroner_spark.functions.normalize import normalize_whitespace
     from neuroner_spark.functions.tokenize import tokenize
@@ -449,7 +449,7 @@ def test_tag_tokens_one_task_per_core(spark):
     tokens = tokenize(pages)
     bundle = make_bundle(build_vocab([r["token"] for r in tokens.select("token").collect()]), seed=42)
     tagged = tag_tokens(spark, tokens, bundle)
-    assert tagged.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    assert tagged.rdd.getNumPartitions() == 2 * spark.sparkContext.defaultParallelism
 
     def labels(df):
         return [r["label"] for r in df.orderBy("doc_id", "sent_id", "pos").collect()]

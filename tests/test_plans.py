@@ -105,7 +105,9 @@ def test_kg_triples_executed_doc_keyed_shuffles(spark):
     the final adaptive plan, read after the action, shows a reused
     exchange as ``ReusedExchange`` and each shuffle that ran as its
     own ``Exchange hashpartitioning(doc_id``.  Five copies of the
-    doc-keyed repartition are planned; two reuse an earlier one."""
+    doc-keyed repartition are planned: one runs for the sentence-pair
+    join and one for the (doc_id, ent) set, which the cap count and
+    both sides of the co-occurrence join reuse."""
     from neuroner_spark.functions.tokenize import tokenize
     from neuroner_spark.operators.gazetteer import match_mentions
     from neuroner_spark.operators.linking import link_mentions
@@ -126,4 +128,4 @@ def test_kg_triples_executed_doc_keyed_shuffles(spark):
     assert "isFinalPlan=true" in final
     doc_shuffles = [l for l in final.splitlines() if "Exchange hashpartitioning(doc_id" in l]
     ran = [l for l in doc_shuffles if "ReusedExchange" not in l]
-    assert (len(ran), len(doc_shuffles) - len(ran)) == (3, 2), final
+    assert (len(ran), len(doc_shuffles) - len(ran)) == (2, 3), final
