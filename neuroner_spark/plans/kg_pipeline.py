@@ -167,6 +167,29 @@ def sameas_edges_from_aliases(alias_dict: DataFrame) -> DataFrame:
     )
 
 
+def sameas_evidence(alias_dict: DataFrame, extra: DataFrame | None = None) -> DataFrame:
+    """One snapshot's same-as evidence for ``run_incremental_canonical``:
+    alias-share edges (idempotent re-entry: already-merged components
+    rewrite to self-loops) + IDENTITY self-edges for every dictionary
+    entity + the caller's ``extra`` (src, dst) edges.  The self-edges
+    matter: they ISSUE an id for every entity the pipeline can emit, so
+    a later merge of two ids always finds both issued and records the
+    retirement in `superseded` — an id used by an earlier triple
+    partition but absent from the issued store would dodge the
+    read-time re-key.  Dictionary-sized: the merge never sees the
+    corpus."""
+    edges = sameas_edges_from_aliases(alias_dict).unionByName(
+        alias_dict.select(F.col("entity_id").cast("long").alias("src"))
+        .distinct()
+        .withColumn("dst", F.col("src"))
+    )
+    if extra is not None:
+        edges = edges.unionByName(
+            extra.select(F.col("src").cast("long"), F.col("dst").cast("long"))
+        )
+    return edges
+
+
 def canonical_map(alias_dict: DataFrame, small_threshold: int = 100_000) -> DataFrame:
     """entity_id -> canonical_id (= min entity id in the same-as
     component).
@@ -884,6 +907,22 @@ def read_kg_triples(spark: SparkSession, store_dir: str) -> DataFrame:
     return rekey_triples(triples, resolved)
 
 
+def near_dup_decisions(
+    spark: SparkSession, pages: DataFrame, dedup_dir: str, snapshot_id: int
+) -> DataFrame:
+    """Near-dup gate of one snapshot's pages against the accumulated
+    band index (``run_incremental_snapshot`` under ``dedup_dir``).  Page
+    key = xxhash64(url), so re-crawled/mirrored pages drop without
+    rescanning old text.  Returns the disk-backed decisions (doc_id,
+    status, dup_of); every status but ``kept`` is a near-duplicate."""
+    from neuroner_spark.plans.corpus_pipeline import run_incremental_snapshot
+
+    docs = pages.select(F.xxhash64("url").alias("doc_id"), F.col("text"))
+    return run_incremental_snapshot(
+        spark, docs, dedup_dir, snapshot_id, fast_hash=True
+    )["decisions"]
+
+
 def run_incremental_kg(
     spark: SparkSession,
     pages: DataFrame,
@@ -899,15 +938,11 @@ def run_incremental_kg(
     the north_rule composition of the three snapshot stores:
 
       1. near-dup gate vs the accumulated band index
-         (``run_incremental_snapshot`` under {store}/dedup; page key =
-         xxhash64(url), so re-crawled/mirrored pages drop without
-         rescanning old text)
+         (``near_dup_decisions`` under {store}/dedup)
       2. same-as evidence -> issued-id merge
-         (``run_incremental_canonical`` under {store}/canonical;
-         evidence defaults to the alias dictionary's share-an-alias
-         edges — already-issued components re-enter as self-loops and
-         cost nothing; callers add cross-snapshot discoveries via
-         ``new_sameas_edges``)
+         (``run_incremental_canonical`` under {store}/canonical over
+         ``sameas_evidence``; callers add cross-snapshot discoveries
+         via ``new_sameas_edges``)
       3. KG pipeline over the KEPT pages with the issued mapping
          injected as the canonicalization (``run_pipeline`` under
          {store}/runs/snapshot=<k>, checkpoint/resume intact)
@@ -918,20 +953,14 @@ def run_incremental_kg(
     cumulative superseded chain, so earlier snapshots' triples follow
     id retirements without their partitions being touched.
     """
-    from neuroner_spark.plans.corpus_pipeline import run_incremental_snapshot
-
     step_walls: dict[str, float] = {}
     _t0 = time.time()
     kept_pages = pages
     decisions = None
     if dedup:
-        docs = pages.select(
-            F.xxhash64("url").alias("doc_id"), F.col("text")
+        decisions = near_dup_decisions(
+            spark, pages, os.path.join(store_dir, "dedup"), snapshot_id
         )
-        ded = run_incremental_snapshot(
-            spark, docs, os.path.join(store_dir, "dedup"), snapshot_id, fast_hash=True
-        )
-        decisions = ded["decisions"]
         kept_ids = decisions.filter(F.col("status") == "kept").select("doc_id")
         kept_pages = pages.join(
             kept_ids.withColumnRenamed("doc_id", "_k"),
@@ -939,25 +968,7 @@ def run_incremental_kg(
             "left_semi",
         )
     step_walls["dedup_gate"] = round(time.time() - _t0, 3)
-    # evidence = alias-share edges (idempotent re-entry: already-merged
-    # components rewrite to self-loops) + caller-discovered edges +
-    # IDENTITY self-edges for every dictionary entity.  The self-edges
-    # matter: they ISSUE an id for every entity the pipeline can emit,
-    # so a later merge of two ids always finds both issued and records
-    # the retirement in `superseded` — an id used by an earlier triple
-    # partition but absent from the issued store would dodge the
-    # read-time re-key.
-    edges = sameas_edges_from_aliases(alias_dict).unionByName(
-        alias_dict.select(F.col("entity_id").cast("long").alias("src"))
-        .distinct()
-        .withColumn("dst", F.col("src"))
-    )
-    if new_sameas_edges is not None:
-        edges = edges.unionByName(
-            new_sameas_edges.select(
-                F.col("src").cast("long"), F.col("dst").cast("long")
-            )
-        )
+    edges = sameas_evidence(alias_dict, new_sameas_edges)
     canon_store = os.path.join(store_dir, "canonical")
     _t0 = time.time()
     canon_res = run_incremental_canonical(spark, edges, canon_store, snapshot_id)

@@ -6,8 +6,9 @@ Shape: ``readStream`` over the pages landing zone -> watermark on
 ``warc_ts`` (late pages tolerated up to the watermark, then dropped)
 -> either
   (a) windowed mention-rate aggregation (monitoring), or
-  (b) ``foreachBatch`` running the batch KG stages per micro-batch and
-      writing to the triples table — exactly-once end-to-end because
+  (b) ``foreachBatch`` running the batch snapshot path (``run_pipeline``
+      and the incremental gates) per micro-batch and writing to the
+      triples table — exactly-once end-to-end because
       each micro-batch OVERWRITES its own ``batch_id=<n>`` partition:
       a batch retried from the checkpoint after a partial write lands
       on the same path and replaces it, never duplicating rows.
@@ -76,11 +77,43 @@ def run_streaming_pipeline(
     sameas_evidence_fn=None,
 ) -> None:
     """foreachBatch KG pipeline: each micro-batch of pages runs the
-    batch stages (normalize -> tokenize -> match -> link -> triples)
-    and writes its own ``batch_id=<n>`` partition of the triples table
-    (idempotent under retry; readers see ``batch_id`` as a partition
-    column). Drains available input and stops (availableNow) — swap
-    the trigger for continuous operation.
+    batch snapshot path and writes its own ``batch_id=<n>`` partition
+    of the triples table (idempotent under retry; readers see
+    ``batch_id`` as a partition column). Drains available input and
+    stops (availableNow) — swap the trigger for continuous operation.
+
+    A micro-batch keeps only what belongs to streaming — the intake
+    gates, the ``batch_id`` -> snapshot-id mapping and the sinks — and
+    calls the code ``run_incremental_kg`` composes for the rest:
+      - ``near_dup_decisions``: the near-dup gate (``dedup_store_dir``)
+      - ``sameas_evidence`` -> ``run_incremental_canonical``: the
+        issued-id merge (``incremental_canonical``)
+      - ``run_pipeline``: normalize -> tokenize -> mentions -> link ->
+        triples, with its stage manifests, lineage and resume, under
+        the per-batch run directory
+        ``{checkpoint_dir}/kg_runs/batch_id=<n>`` (a retried batch
+        resumes the stages its earlier attempt wrote).
+
+    Differences from ``run_incremental_kg``, each on purpose:
+      - the canonical snapshot id is ``batch_id + 1`` (batch:
+        ``snapshot_id``); snapshot 0 is reserved for an optional
+        batch-side seed (``run_incremental_canonical(...,
+        snapshot_id=0)``).
+      - the triple sink is ``{out_dir}/batch_id=<n>`` (batch:
+        ``{store}/triples/snapshot=<k>``).
+      - without ``canonical_store_dir`` the canonicalization is
+        ``run_pipeline``'s own ``canonical_map(alias_dict)`` stage,
+        built per micro-batch; its values never change, because the
+        dictionary is fixed for the stream.
+      - with ``canonical_store_dir`` and no ``incremental_canonical``,
+        the issued mapping is snapshotted once at stream start and
+        injected as ``canonical=``.
+      - each run directory also holds ``co_occurs_capped``,
+        ``entities`` and the manifests.  They pile up per batch, as
+        ``runs/snapshot=<k>`` does on the batch path; nothing prunes
+        them.
+    Linking is exact-only on both paths (``run_pipeline``'s
+    ``use_fuzzy=False`` default).
 
     ``verb_lexicon``: opt-in OpenIE-lite verb predicates, same contract
     as the batch pipeline (``verb_triples_from_mentions``).
@@ -91,8 +124,9 @@ def run_streaming_pipeline(
     streaming triples then share one id space with the batch stores,
     and ``read_kg_triples``-style re-keying applies to them too.
     Snapshotted once at stream start (micro-batches within one run see
-    one consistent mapping; restart the stream to pick up newer ids).
-    Entities absent from the store identity-map, like the batch path.
+    one consistent mapping; restart the stream to pick up newer ids)
+    and released when the stream stops.  Entities absent from the
+    store identity-map, like the batch path.
 
     ``incremental_canonical=True`` (r6): instead of a read-only
     stream-start snapshot, each micro-batch RUNS
@@ -102,17 +136,12 @@ def run_streaming_pipeline(
     under the updated mapping, and the retirements land as the
     snapshot's ``superseded`` side output (the append-only audit
     record ``read_streaming_triples`` re-keys earlier batches by).
-    Evidence per batch = the alias dictionary's share-an-alias edges +
-    identity self-edges (``run_incremental_kg``'s rule — already-merged
-    components re-enter as self-loops and cost nothing; the CC runs
-    over dictionary-sized evidence, never the corpus), plus whatever
-    ``sameas_evidence_fn(batch_df, batch_id) -> DataFrame(src, dst) |
-    None`` derives from the batch (cross-snapshot discoveries, e.g. a
-    fuzzy-link reviewer's confirmations).  Store contract: canonical
-    snapshot id = batch_id + 1 — snapshot 0 is reserved for an
-    optional batch-side seed (``run_incremental_canonical(...,
-    snapshot_id=0)``), and a retried micro-batch overwrites its own
-    snapshot partition, keeping the gate retry-idempotent.
+    Evidence per batch = ``sameas_evidence`` with, as its extra edges,
+    whatever ``sameas_evidence_fn(batch_df, batch_id) -> DataFrame(src,
+    dst) | None`` derives from the batch (cross-snapshot discoveries,
+    e.g. a fuzzy-link reviewer's confirmations).  A retried
+    micro-batch overwrites its own snapshot partition, keeping the
+    merge retry-idempotent.
 
     Intake gates (the corpus-prep filters applied AT ingest, so junk
     never reaches the KG stages): ``min_quality`` drops pages below
@@ -125,41 +154,35 @@ def run_streaming_pipeline(
     never duplicates rejects either.
 
     ``dedup_store_dir`` adds the INCREMENTAL NEAR-DUP gate (r6): each
-    micro-batch's quality-accepted pages dedup against the accumulated
-    band-signature store (``run_incremental_snapshot`` keyed by
-    ``xxhash64(url)`` — 64-bit, collisions negligible at crawl scale),
-    with ``batch_id`` as the snapshot id.  Near-dups of ANY previously
-    ingested page (or of another page in the same batch) are routed to
-    rejects as ``near_duplicate``; survivors' band signatures are
-    appended so later batches see them.  A retried batch overwrites
-    its own store partition and ``run_incremental_snapshot`` excludes
-    it from the corpus side, so the gate is retry-idempotent like both
-    sinks.  Quality/contamination run FIRST so junk never enters the
+    micro-batch's quality-accepted pages go through
+    ``near_dup_decisions`` against the accumulated band-signature
+    store, with ``batch_id`` as the snapshot id.  Near-dups of ANY
+    previously ingested page (or of another page in the same batch)
+    are routed to rejects as ``near_duplicate``; survivors' band
+    signatures are appended so later batches see them.  A retried
+    batch overwrites its own store partition and is excluded from the
+    corpus side, so the gate is retry-idempotent like both sinks.
+    Quality/contamination run FIRST so junk never enters the
     signature store."""
     import os
 
     from neuroner_spark.functions.text_analysis import quality_score
-    from neuroner_spark.functions.tokenize import tokenize
     from neuroner_spark.operators.dedup import benchmark_contamination
-    from neuroner_spark.operators.gazetteer import match_mentions
-    from neuroner_spark.operators.linking import link_mentions
     from neuroner_spark.plans.kg_pipeline import (
-        canonical_map,
-        neural_mentions,
-        normalize_pages,
-        triples_from_linked,
+        _snapshot_dirs,
+        near_dup_decisions,
+        run_incremental_canonical,
+        run_pipeline,
+        sameas_evidence,
     )
     from neuroner_spark.session import release
 
     if mention_source == "neural" and bundle is None:
         raise ValueError("mention_source='neural' requires a weight bundle")
-    if incremental_canonical:
-        if canonical_store_dir is None:
-            raise ValueError("incremental_canonical requires canonical_store_dir")
-        canon = None  # resolved per micro-batch below
-    elif canonical_store_dir is not None:
-        from neuroner_spark.plans.kg_pipeline import _snapshot_dirs
-
+    if incremental_canonical and canonical_store_dir is None:
+        raise ValueError("incremental_canonical requires canonical_store_dir")
+    canon = None  # run_pipeline's canonical_map, or merged per batch
+    if canonical_store_dir is not None and not incremental_canonical:
         snaps = _snapshot_dirs(
             os.path.join(canonical_store_dir, "mapping"), "snapshot"
         )
@@ -180,16 +203,13 @@ def run_streaming_pipeline(
             )
             .localCheckpoint()  # one read at stream start, not per batch
         )
-    else:
-        canon = canonical_map(alias_dict)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        # what a batch pins (the gate frame, the triples' mention
-        # checkpoint) is released once its writes are done: under a
-        # continuous (non-availableNow) trigger it would otherwise
-        # accumulate across micro-batches
+        # the gate frame is released once the batch's writes are done:
+        # under a continuous (non-availableNow) trigger it would
+        # otherwise accumulate across micro-batches
         pinned: list[DataFrame] = []
         try:
             _run_batch(batch_df, batch_id, pinned)
@@ -221,31 +241,9 @@ def run_streaming_pipeline(
             gated = gated.persist()
             pinned.append(gated)
             if dedup_store_dir is not None:
-                from neuroner_spark.plans.corpus_pipeline import run_incremental_snapshot
-
                 accepted = gated.filter(F.col("_reject_reason").isNull())
-                snap_src = accepted.select(F.xxhash64("url").alias("doc_id"), "text")
-                if not snap_src.isEmpty():
-                    # spill the batch's dedup input to a scratch
-                    # partition and read it back: the dedup's
-                    # pair/star-edge unions trip Catalyst's Union
-                    # constraint rewrite (key-not-found on a pruned
-                    # attribute) when the micro-batch's cloned-session
-                    # lineage flows into them.  Overwrite of the
-                    # batch's own path = retry-idempotent like every
-                    # sink here.
-                    intake = os.path.join(
-                        dedup_store_dir, "intake", f"batch_id={batch_id}"
-                    )
-                    snap_src.write.mode("overwrite").parquet(intake)
-                    snap = spark.read.parquet(intake)
-                    decisions = run_incremental_snapshot(
-                        spark,
-                        snap,
-                        dedup_store_dir,
-                        snapshot_id=batch_id,
-                        fast_hash=True,
-                    )["decisions"]
+                if not accepted.isEmpty():
+                    decisions = near_dup_decisions(spark, accepted, dedup_store_dir, batch_id)
                     dups = decisions.filter(F.col("status") != "kept").select(
                         F.col("doc_id").alias("_did"),
                         F.lit("near_duplicate").alias("_dup_reason"),
@@ -271,61 +269,39 @@ def run_streaming_pipeline(
             )
             if batch_df.isEmpty():
                 return
+        batch_canon = canon
         if incremental_canonical:
-            # fold this batch's same-as evidence into the issued-id
-            # store BEFORE building triples: merges retire ids now,
-            # this batch writes under the updated mapping, and the
-            # snapshot's superseded partition is the audit record
-            # earlier batches re-key by (read_streaming_triples).
-            # The mapping/superseded frames round-trip through their
-            # own parquet partitions inside run_incremental_canonical,
-            # so nothing here pins executor storage across batches.
-            from neuroner_spark.plans.kg_pipeline import (
-                run_incremental_canonical,
-                sameas_edges_from_aliases,
-            )
-
-            edges = sameas_edges_from_aliases(alias_dict).unionByName(
-                alias_dict.select(F.col("entity_id").cast("long").alias("src"))
-                .distinct()
-                .withColumn("dst", F.col("src"))
-            )
-            if sameas_evidence_fn is not None:
-                ev = sameas_evidence_fn(batch_df, batch_id)
-                if ev is not None:
-                    edges = edges.unionByName(
-                        ev.select(F.col("src").cast("long"), F.col("dst").cast("long"))
-                    )
+            # fold this batch's evidence into the issued-id store BEFORE
+            # building triples: merges retire ids now, this batch writes
+            # under the updated mapping, and the snapshot's superseded
+            # partition is the audit record earlier batches re-key by
+            extra = sameas_evidence_fn(batch_df, batch_id) if sameas_evidence_fn else None
             batch_canon = run_incremental_canonical(
-                spark, edges, canonical_store_dir, snapshot_id=batch_id + 1
+                spark, sameas_evidence(alias_dict, extra), canonical_store_dir, batch_id + 1
             )["mapping"]
-        else:
-            batch_canon = canon
-        norm = normalize_pages(batch_df)
-        tokens = tokenize(norm)
-        if mention_source == "neural":
-            mentions = neural_mentions(spark, tokens, bundle)
-        else:
-            mentions = match_mentions(tokens, alias_dict)
-        linked = link_mentions(mentions, alias_dict, use_fuzzy=False)
-        meta = norm.select(F.col("doc_id").alias("url"), "warc_ts")
-        triples = triples_from_linked(
-            linked, batch_canon, meta, pinned=pinned,
-            verb_lexicon=verb_lexicon, tokens=tokens,
+        run = run_pipeline(
+            spark, batch_df, alias_dict,
+            os.path.join(checkpoint_dir, "kg_runs", f"batch_id={batch_id}"),
+            mention_source=mention_source, bundle=bundle,
+            verb_lexicon=verb_lexicon, canonical=batch_canon,
         )
         # deterministic per-batch path + overwrite = retry-idempotent
-        triples.write.mode("overwrite").parquet(
+        run["triples"].write.mode("overwrite").parquet(
             os.path.join(out_dir, f"batch_id={batch_id}")
         )
 
-    q = (
-        read_pages_stream(spark, landing_dir)
-        .writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    try:
+        q = (
+            read_pages_stream(spark, landing_dir)
+            .writeStream.foreachBatch(process_batch)
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    finally:
+        if canon is not None:
+            release(canon)
 
 
 def read_streaming_triples(

@@ -687,3 +687,134 @@ def test_streaming_incremental_canonicalization(spark, tmp_path):
     assert 6 not in page_ids(view)
     assert view.filter(F.col("subj") == F.col("obj")).count() == 0
     assert {3, 5} <= page_ids(view)
+
+
+def _stream_pages(spark, rows):
+    from neuroner_spark.streaming.ingest import PAGES_SCHEMA
+
+    # one file per drain, so each drain is one micro-batch
+    return spark.createDataFrame(rows, PAGES_SCHEMA).coalesce(1)
+
+
+def test_streaming_matches_batch_snapshots(spark, tmp_path):
+    """Two micro-batches (near-dup gate + incremental canonicalization)
+    and two run_incremental_kg snapshots over the same pages agree: the
+    same triples per snapshot, the same non-kept doc ids and the same
+    final issued mapping.  Snapshot 1 re-crawls 5 snapshot-0 pages
+    under new urls and brings same-as evidence (3, 4), which merges
+    two issued ids."""
+    from neuroner_spark.fixtures.gen import alias_df, page_rows
+    from neuroner_spark.plans.kg_pipeline import run_incremental_kg
+    from neuroner_spark.streaming.ingest import run_streaming_pipeline
+
+    rows = page_rows(60)
+    recrawls = [(f"http://recrawl.example/{i}",) + tuple(r[1:]) for i, r in enumerate(rows[:5])]
+    snaps = [rows[:40], rows[40:] + recrawls]
+    aliases = alias_df(spark)
+
+    def evidence(_batch_df, batch_id):
+        if batch_id == 1:
+            return spark.createDataFrame([(3, 4)], "src long, dst long")
+        return None
+
+    store = str(tmp_path / "store")
+    batch = [
+        run_incremental_kg(
+            spark, _stream_pages(spark, snaps[k]), aliases, store, k,
+            new_sameas_edges=evidence(None, k),
+        )
+        for k in (0, 1)
+    ]
+
+    landing, out, ckpt, rejects = (
+        str(tmp_path / d) for d in ("landing", "triples", "ckpt", "rejects")
+    )
+    canon_store = str(tmp_path / "canon")
+    for k in (0, 1):
+        _stream_pages(spark, snaps[k]).write.mode("append").parquet(landing)
+        run_streaming_pipeline(
+            spark, landing, out, ckpt, aliases,
+            rejects_dir=rejects, dedup_store_dir=str(tmp_path / "dedup"),
+            canonical_store_dir=canon_store, incremental_canonical=True,
+            sameas_evidence_fn=evidence,
+        )
+
+    def triples(df):
+        return {tuple(r) for r in df.select("subj", "pred", "obj", "url", "warc_ts").collect()}
+
+    def url_ids(df):
+        return {r[0] for r in df.select(F.xxhash64("url")).collect()}
+
+    dropped = {}
+    for k in (0, 1):
+        want = triples(batch[k]["triples"])
+        assert want and triples(spark.read.parquet(os.path.join(out, f"batch_id={k}"))) == want
+        dropped[k] = {
+            r["doc_id"] for r in batch[k]["decisions"].filter(F.col("status") != "kept").collect()
+        }
+        assert url_ids(spark.read.parquet(os.path.join(rejects, f"batch_id={k}"))) == dropped[k]
+    assert url_ids(_stream_pages(spark, recrawls)) <= dropped[1]
+
+    def stored(*path):
+        return {tuple(r) for r in spark.read.parquet(os.path.join(*path)).collect()}
+
+    final = stored(store, "canonical", "mapping", "snapshot=1")
+    assert len(final) == 200 and (4, 3) in final
+    assert stored(canon_store, "mapping", "snapshot=2") == final
+    retired = stored(store, "canonical", "superseded", "snapshot=1")
+    assert retired == {(4, 3)}
+    assert stored(canon_store, "superseded", "snapshot=2") == retired
+
+
+def test_streaming_batches_write_stage_manifests(spark, tmp_path):
+    """Each micro-batch runs run_pipeline under its own run directory:
+    the lineage lists all 8 stages, and the triples manifest counts
+    exactly the rows of the batch's sink partition."""
+    import json
+
+    from neuroner_spark.fixtures.gen import alias_df, page_rows
+    from neuroner_spark.streaming.ingest import run_streaming_pipeline
+
+    landing, out, ckpt = (str(tmp_path / d) for d in ("landing", "triples", "ckpt"))
+    _stream_pages(spark, page_rows(30)).write.parquet(landing)
+    run_streaming_pipeline(spark, landing, out, ckpt, alias_df(spark))
+    with open(os.path.join(ckpt, "kg_runs", "batch_id=0", "lineage.json")) as f:
+        lineage = json.load(f)
+    assert [m["stage"] for m in lineage] == [
+        "normalized", "tokens", "mentions", "linked",
+        "canonical", "triples", "co_occurs_capped", "entities",
+    ]
+    n_rows = next(m["n_rows"] for m in lineage if m["stage"] == "triples")
+    assert n_rows > 0
+    assert n_rows == spark.read.parquet(out).filter(F.col("batch_id") == 0).count()
+
+
+def test_streaming_releases_stream_start_canonical(spark, tmp_path, request):
+    """canonical_store_dir= without incremental_canonical checkpoints
+    the issued mapping once at stream start; the checkpoint is freed
+    when the stream stops."""
+    import datetime as dt
+
+    from neuroner_spark.plans.catalog_kg import _aliases
+    from neuroner_spark.plans.kg_pipeline import run_incremental_canonical
+    from neuroner_spark.streaming.ingest import run_streaming_pipeline
+
+    canon_store = str(tmp_path / "canon")
+    edges = spark.createDataFrame(
+        [(e, e) for e in range(1, 12)] + [(5, 6)], "src long, dst long"
+    )
+    run_incremental_canonical(spark, edges, canon_store, 0)
+    landing = str(tmp_path / "landing")
+    ts = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
+    spark.createDataFrame(
+        [("https://s/1", ts, "the merge sort beats the window and the table scan here", "en")],
+        "url string, warc_ts timestamp, text string, lang string",
+    ).write.parquet(landing)
+    # pins counted from here: the store seed above is not the stream's
+    new_pinned = request.getfixturevalue("new_pinned")
+    run_streaming_pipeline(
+        spark, landing, str(tmp_path / "triples"), str(tmp_path / "ckpt"),
+        _aliases(spark), canonical_store_dir=canon_store,
+    )
+    assert spark.read.parquet(str(tmp_path / "triples")).count() > 0
+    assert new_pinned(0) == set()
