@@ -7,7 +7,7 @@ Reference parity:
   normalized text remain valid against the original; this is the
   per-url byte-identity invariant from BASELINE.json#input_hint.
 - P1: ``src/utils_nlp.py :: is_token_in_pretrained_embeddings`` probe
-  variants — lowercase, digits->0.
+  variants — lowercase, digits->0, folded inline by ``surface_norm``.
 
 All JVM-side (`pyspark.sql.functions`), no Python on the hot path.
 """
@@ -25,16 +25,6 @@ _UNICODE_WS = r"(?U)\s"
 def normalize_whitespace(col: Column) -> Column:
     """P2: each unicode-whitespace char -> one ASCII space (length-preserving)."""
     return F.regexp_replace(col, _UNICODE_WS, " ")
-
-
-def lower_norm(col: Column) -> Column:
-    """P1 variant probe: lowercase."""
-    return F.lower(col)
-
-
-def digits_to_zero(col: Column) -> Column:
-    """P1 variant probe: every digit -> '0'."""
-    return F.regexp_replace(col, r"\d", "0")
 
 
 def surface_norm(col: Column) -> Column:

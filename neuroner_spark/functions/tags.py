@@ -20,11 +20,6 @@ from pyspark.sql import functions as F
 SENT_WINDOW_COLS = ("doc_id", "sent_id")
 
 
-def tag_prefix(label: Column) -> Column:
-    """'B-PER' -> 'B'; 'O' -> 'O'."""
-    return F.when(label == "O", F.lit("O")).otherwise(F.substring(label, 1, 1))
-
-
 def tag_type(label: Column) -> Column:
     """F3: 'B-PER' -> 'PER'; 'O' -> 'O'."""
     return F.regexp_replace(label, r"^[BIOES]-", "")
@@ -63,11 +58,6 @@ def with_bioes(df: DataFrame, label_col: str = "label", out_col: str = "label_bi
         .otherwise(lab)
     )
     return df.withColumn(out_col, converted)
-
-
-def with_bio(df: DataFrame, label_col: str = "label_bioes", out_col: str = "label_bio") -> DataFrame:
-    """W3 as a DataFrame transform."""
-    return df.withColumn(out_col, bioes_to_bio(F.col(label_col)))
 
 
 def bioes_violations(df: DataFrame, label_col: str = "label") -> DataFrame:

@@ -161,18 +161,19 @@ def run_corpus_prep(
     fp_docs = _fingerprint(docs.select(id_col, text_col), "corpus")
 
     def stage(name: str, fp: str, build, extra_fn=None):
+        path = os.path.join(out_dir, name)
         if resume:
-            cached = _try_resume(spark, out_dir, name, fp, lineage)
+            cached = _try_resume(spark, path, fp, lineage)
             if cached is not None:
                 return cached
-        out = _write_stage(build(), out_dir, name, fp, lineage)
+        out = _write_stage(build(), path, name, fp, lineage)
         if extra_fn is not None:
             extra = extra_fn()
             if extra:
                 # fold build-time detail (e.g. per-CC-iteration walls)
                 # into the stage manifest so a resumed run replays it
                 lineage[-1].update(extra)
-                with open(_manifest_path(out_dir, name), "w") as f:
+                with open(_manifest_path(path), "w") as f:
                     json.dump(lineage[-1], f)
         return out
 

@@ -67,8 +67,10 @@ DEFAULT_VERB_LEXICON = ["agg", "batch", "filter", "group", "order", "plan", "que
 VERB_MAX_GAP = 8
 
 
-def _manifest_path(out_dir: str, stage: str) -> str:
-    return os.path.join(out_dir, stage, "_manifest.json")
+def _manifest_path(path: str) -> str:
+    """A stage's manifest sits beside its data; Spark and pyarrow both
+    skip ``_``-prefixed files, so the directory reads as plain Parquet."""
+    return os.path.join(path, "_manifest.json")
 
 
 def _snapshot_dirs(root: str, prefix: str) -> list[tuple[int, str]]:
@@ -84,44 +86,51 @@ def _snapshot_dirs(root: str, prefix: str) -> list[tuple[int, str]]:
     return sorted(out)
 
 
-def _write_stage(df: DataFrame, out_dir: str, stage: str, fingerprint: str, lineage: list[dict]) -> DataFrame:
-    path = os.path.join(out_dir, stage)
-    t0 = time.time()
-    write_table(df, path)
-    spark = df.sparkSession
-    out = read_table(spark, path)
-    # per-partition lineage (north_rule): row-count histogram over the
-    # materialized partitions — the skew instrument; one cheap agg on
-    # data already read for the row count
-    per_part = (
-        out.groupBy(F.spark_partition_id().alias("pid"))
-        .count()
-        .agg(
-            F.count("*").alias("parts"),
-            F.sum("count").alias("rows"),
-            F.min("count").alias("min"),
-            F.max("count").alias("max"),
-        )
-        .collect()[0]
-    )
-    wall = time.time() - t0
-    manifest = {
-        "stage": stage,
-        "fingerprint": fingerprint,
-        "n_rows": int(per_part["rows"] or 0),
-        "wall_s": round(wall, 3),
-        "n_partitions": int(per_part["parts"]),
-        "partition_rows_min": int(per_part["min"] or 0),
-        "partition_rows_max": int(per_part["max"] or 0),
+def _scan(df: DataFrame, content_hash: bool = False) -> dict:
+    """One aggregation grouped by partition, one row per partition to
+    the driver: the row-count histogram every manifest records
+    (per-partition lineage, north_rule — the skew instrument) and, with
+    ``content_hash``, the order-insensitive row hash fingerprints are
+    made of."""
+    aggs = [F.count("*").alias("n")]
+    if content_hash:
+        aggs.append(F.sum(F.xxhash64(*df.columns) % F.lit(1 << 40)).alias("h"))
+    parts = df.groupBy(F.spark_partition_id()).agg(*aggs).collect()
+    counts = [r["n"] for r in parts]
+    out = {
+        "n_rows": sum(counts),
+        "n_partitions": len(counts),
+        "partition_rows_min": min(counts, default=0),
+        "partition_rows_max": max(counts, default=0),
     }
-    with open(_manifest_path(out_dir, stage), "w") as f:
-        json.dump(manifest, f)
-    lineage.append(manifest)
+    if content_hash:
+        out["hash"] = sum(r["h"] for r in parts) if parts else None
     return out
 
 
-def _try_resume(spark: SparkSession, out_dir: str, stage: str, fingerprint: str, lineage: list[dict]) -> DataFrame | None:
-    mp = _manifest_path(out_dir, stage)
+def _record(stage: str, fingerprint: str, stats: dict, t0: float, lineage: list[dict]) -> dict:
+    manifest = {
+        "stage": stage,
+        "fingerprint": fingerprint,
+        "wall_s": round(time.time() - t0, 3),
+        **stats,
+    }
+    lineage.append(manifest)
+    return manifest
+
+
+def _write_stage(df: DataFrame, path: str, stage: str, fingerprint: str, lineage: list[dict]) -> DataFrame:
+    t0 = time.time()
+    write_table(df, path)
+    out = read_table(df.sparkSession, path)
+    manifest = _record(stage, fingerprint, _scan(out), t0, lineage)
+    with open(_manifest_path(path), "w") as f:
+        json.dump(manifest, f)
+    return out
+
+
+def _try_resume(spark: SparkSession, path: str, fingerprint: str, lineage: list[dict]) -> DataFrame | None:
+    mp = _manifest_path(path)
     if not os.path.exists(mp):
         return None
     with open(mp) as f:
@@ -130,18 +139,15 @@ def _try_resume(spark: SparkSession, out_dir: str, stage: str, fingerprint: str,
         return None
     manifest["resumed"] = True
     lineage.append(manifest)
-    return read_table(spark, os.path.join(out_dir, stage))
+    return read_table(spark, path)
 
 
 def _fingerprint(df: DataFrame, extra: str = "") -> str:
     """Cheap input fingerprint: row count + order-insensitive row hash.
     One scan; at 10^12 scale swap for the Iceberg snapshot id (same
     call site, O(1))."""
-    row = df.select(
-        F.count("*").alias("n"),
-        F.sum(F.xxhash64(*df.columns) % F.lit(1 << 40)).alias("h"),
-    ).collect()[0]
-    return f"{row['n']}:{row['h']}:{extra}"
+    scan = _scan(df, content_hash=True)
+    return f"{scan['n_rows']}:{scan['hash']}:{extra}"
 
 
 def normalize_pages(pages: DataFrame) -> DataFrame:
@@ -602,9 +608,15 @@ def run_pipeline(
     canonical: DataFrame | None = None,
     entity_types: DataFrame | None = None,
     verb_type_constraints: list[tuple] | None = None,
+    triples_dir: str | None = None,
 ) -> dict:
     """Run all stages with checkpoint/resume; returns
     {'triples': DataFrame, 'entities': DataFrame, 'lineage': [...]}.
+
+    Each stage writes ``{out_dir}/<stage>`` with its ``_manifest.json``
+    beside the data, except the ``triples`` stage, which writes
+    ``triples_dir`` when given (a store's own sink partition) — so the
+    triples are written once, where they are kept.
 
     mention_source: 'gazetteer' (J8 broadcast n-gram match) or
     'neural' (D1 BiLSTM-CRF tagger; requires ``bundle``).
@@ -619,8 +631,14 @@ def run_pipeline(
     editing the whitelist invalidates the checkpoint.
     canonical: injected (entity_id, canonical_id) mapping replacing the
     alias-dict-derived canonical_map — the incremental path threads the
-    issued-id store through here; content-fingerprinted into every
-    canon-consuming stage.
+    issued-id store through here.  It is used in place, never copied:
+    its one content scan yields the fingerprint (folded into every
+    canon-consuming stage) and the ``canonical`` lineage record.
+
+    Resume keys on content fingerprints, never on directory names, so
+    one ``out_dir`` can serve every snapshot of a store: a later run
+    overwrites the stages whose fingerprint changed and resumes the
+    rest.
     """
     os.makedirs(out_dir, exist_ok=True)
     lineage: list[dict] = []
@@ -629,12 +647,13 @@ def run_pipeline(
     fp_pages = _fingerprint(pages.select("url", "warc_ts", "text"), "pages")
     fp_alias = _fingerprint(alias_dict.select("alias_norm", "entity_id"), "alias")
 
-    def stage(name: str, fp: str, build):
+    def stage(name: str, fp: str, build, path: str | None = None):
+        path = path or os.path.join(out_dir, name)
         if resume:
-            cached = _try_resume(spark, out_dir, name, fp, lineage)
+            cached = _try_resume(spark, path, fp, lineage)
             if cached is not None:
                 return cached
-        return _write_stage(build(), out_dir, name, fp, lineage)
+        return _write_stage(build(), path, name, fp, lineage)
 
     # reference `tokenizer` INI param: resolve the name to an injected
     # fn (None = pinned-regex fast path); a tokenizer switch invalidates
@@ -669,11 +688,14 @@ def run_pipeline(
         "linked", fp_linked, lambda: link_mentions(mentions, alias_dict, use_fuzzy=use_fuzzy)
     )
     if canonical is not None:
-        # injected mapping (the incremental path threads the issued-id
-        # store through here); content-fingerprinted so a new issued
-        # mapping invalidates this stage and everything downstream
-        fp_canon = _fingerprint(canonical, "injected")
-        canon = stage("canonical", fp_canon, lambda: canonical)
+        # injected mapping, used in place: a new issued mapping changes
+        # the fingerprint (same form as _fingerprint) and so invalidates
+        # everything downstream; the same scan gives the lineage record
+        t0 = time.time()
+        scan = _scan(canonical, content_hash=True)
+        fp_canon = f"{scan['n_rows']}:{scan.pop('hash')}:injected"
+        _record("canonical", fp_canon, scan, t0, lineage)
+        canon = canonical
     else:
         fp_canon = fp_alias + "|cc"
         canon = stage("canonical", fp_canon, lambda: canonical_map(alias_dict))
@@ -702,6 +724,7 @@ def run_pipeline(
             entity_types=entity_types,
             verb_type_constraints=verb_type_constraints,
         ),
+        path=triples_dir,
     )
     release(*pinned)  # the stage is written and read back from disk
     # skew-cap audit trail: docs excluded from co_occurs_with pairing,
@@ -760,7 +783,7 @@ def run_incremental_canonical(
     10^9 entities the mapping is one keyed table; CC runs over the new
     edges only (see the operator's scale note).
 
-    Returns {'mapping', 'superseded', 'n_entities', 'n_superseded'}.
+    Returns {'mapping', 'superseded'}, both read back from the store.
     """
     from neuroner_spark.operators.components import merge_canonical_snapshots
 
@@ -779,13 +802,9 @@ def run_incremental_canonical(
     sup_dir = os.path.join(store_dir, "superseded", f"snapshot={snapshot_id}")
     out["mapping"].write.mode("overwrite").parquet(map_dir)
     out["superseded"].write.mode("overwrite").parquet(sup_dir)
-    mapping = spark.read.parquet(map_dir)
-    superseded = spark.read.parquet(sup_dir)
     return {
-        "mapping": mapping,
-        "superseded": superseded,
-        "n_entities": mapping.count(),
-        "n_superseded": superseded.count(),
+        "mapping": spark.read.parquet(map_dir),
+        "superseded": spark.read.parquet(sup_dir),
     }
 
 
@@ -944,10 +963,25 @@ def run_incremental_kg(
          ``sameas_evidence``; callers add cross-snapshot discoveries
          via ``new_sameas_edges``)
       3. KG pipeline over the KEPT pages with the issued mapping
-         injected as the canonicalization (``run_pipeline`` under
-         {store}/runs/snapshot=<k>, checkpoint/resume intact)
-      4. triple append: {store}/triples/snapshot=<k> (overwrite own
-         partition — retry-idempotent, never rewrites history)
+         injected, in place, as the canonicalization (``run_pipeline``
+         under the store's one run directory {store}/run; snapshot k
+         never reads snapshot k-1's stages, and resume keys on content
+         fingerprints, so each snapshot overwrites the stages whose
+         fingerprint changed and a retry of the in-flight or
+         just-committed snapshot resumes)
+      4. its ``triples`` stage writes the store partition
+         {store}/triples/snapshot=<k> directly, ``_manifest.json``
+         beside the data (overwrite own partition — retry-idempotent,
+         never rewrites history); nothing is appended afterwards
+
+    The returned ``triples``, ``mapping`` and ``superseded`` read the
+    store's own snapshot partitions; ``entities`` reads {store}/run,
+    which the store's next snapshot may overwrite.
+
+    ``step_walls['triple_append']`` is kept for the benchmark's layer
+    table.  It times what follows ``run_pipeline``, which is nothing,
+    so it is 0: the sink write's time is now part of the ``triples``
+    stage's ``wall_s``.
 
     Read side: ``read_kg_triples`` re-keys the whole store through the
     cumulative superseded chain, so earlier snapshots' triples follow
@@ -972,25 +1006,22 @@ def run_incremental_kg(
     canon_store = os.path.join(store_dir, "canonical")
     _t0 = time.time()
     canon_res = run_incremental_canonical(spark, edges, canon_store, snapshot_id)
-    canon = canon_res["mapping"]
     step_walls["canonical_merge"] = round(time.time() - _t0, 3)
     _t0 = time.time()
     run = run_pipeline(
         spark,
         kept_pages,
         alias_dict,
-        os.path.join(store_dir, "runs", f"snapshot={snapshot_id}"),
-        canonical=canon,
+        os.path.join(store_dir, "run"),
+        canonical=canon_res["mapping"],
         verb_lexicon=verb_lexicon,
+        triples_dir=os.path.join(store_dir, "triples", f"snapshot={snapshot_id}"),
         **pipeline_kw,
     )
     step_walls["pipeline"] = round(time.time() - _t0, 3)
-    _t0 = time.time()
-    trip_dir = os.path.join(store_dir, "triples", f"snapshot={snapshot_id}")
-    run["triples"].write.mode("overwrite").parquet(trip_dir)
-    step_walls["triple_append"] = round(time.time() - _t0, 3)
+    step_walls["triple_append"] = 0.0
     return {
-        "triples": spark.read.parquet(trip_dir),
+        "triples": run["triples"],
         "decisions": decisions,
         "mapping": canon_res["mapping"],
         "superseded": canon_res["superseded"],

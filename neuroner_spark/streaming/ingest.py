@@ -90,9 +90,12 @@ def run_streaming_pipeline(
         issued-id merge (``incremental_canonical``)
       - ``run_pipeline``: normalize -> tokenize -> mentions -> link ->
         triples, with its stage manifests, lineage and resume, under
-        the per-batch run directory
-        ``{checkpoint_dir}/kg_runs/batch_id=<n>`` (a retried batch
-        resumes the stages its earlier attempt wrote).
+        the stream's one run directory ``{checkpoint_dir}/kg_run``.
+        Its ``triples`` stage writes the batch's sink partition
+        directly, with its ``_manifest.json`` beside the data.  Resume
+        keys on content fingerprints, so each batch overwrites the
+        stages whose fingerprint changed, and a retried batch resumes
+        the stages its earlier attempt wrote.
 
     Differences from ``run_incremental_kg``, each on purpose:
       - the canonical snapshot id is ``batch_id + 1`` (batch:
@@ -102,16 +105,12 @@ def run_streaming_pipeline(
       - the triple sink is ``{out_dir}/batch_id=<n>`` (batch:
         ``{store}/triples/snapshot=<k>``).
       - without ``canonical_store_dir`` the canonicalization is
-        ``run_pipeline``'s own ``canonical_map(alias_dict)`` stage,
-        built per micro-batch; its values never change, because the
-        dictionary is fixed for the stream.
+        ``run_pipeline``'s own ``canonical_map(alias_dict)`` stage;
+        the dictionary is fixed for the stream, so micro-batch 0 builds
+        it (and ``entities``) and later micro-batches resume them.
       - with ``canonical_store_dir`` and no ``incremental_canonical``,
         the issued mapping is snapshotted once at stream start and
         injected as ``canonical=``.
-      - each run directory also holds ``co_occurs_capped``,
-        ``entities`` and the manifests.  They pile up per batch, as
-        ``runs/snapshot=<k>`` does on the batch path; nothing prunes
-        them.
     Linking is exact-only on both paths (``run_pipeline``'s
     ``use_fuzzy=False`` default).
 
@@ -279,15 +278,12 @@ def run_streaming_pipeline(
             batch_canon = run_incremental_canonical(
                 spark, sameas_evidence(alias_dict, extra), canonical_store_dir, batch_id + 1
             )["mapping"]
-        run = run_pipeline(
-            spark, batch_df, alias_dict,
-            os.path.join(checkpoint_dir, "kg_runs", f"batch_id={batch_id}"),
+        run_pipeline(
+            spark, batch_df, alias_dict, os.path.join(checkpoint_dir, "kg_run"),
             mention_source=mention_source, bundle=bundle,
             verb_lexicon=verb_lexicon, canonical=batch_canon,
-        )
-        # deterministic per-batch path + overwrite = retry-idempotent
-        run["triples"].write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch_id={batch_id}")
+            # deterministic per-batch sink + overwrite = retry-idempotent
+            triples_dir=os.path.join(out_dir, f"batch_id={batch_id}"),
         )
 
     try:

@@ -1,6 +1,6 @@
 """Two-size scaling evidence for the INCREMENTAL KG path (r6): the
-same snapshot-1 ingest (dedup gate -> canonical merge -> pipeline ->
-triple append) on the same input at local[N] and local[4N], fresh JVM
+same snapshot-1 ingest (dedup gate -> canonical merge -> pipeline,
+whose triples stage writes the store partition) on the same input at local[N] and local[4N], fresh JVM
 per leg, BLAS pinned — the north-rule N->4N criterion applied to
 run_incremental_kg the way BENCH/BASELINE.md applies it to the tagger
 and scripts/corpus_scaling.py to corpus prep.

@@ -767,9 +767,9 @@ def test_streaming_matches_batch_snapshots(spark, tmp_path):
 
 
 def test_streaming_batches_write_stage_manifests(spark, tmp_path):
-    """Each micro-batch runs run_pipeline under its own run directory:
-    the lineage lists all 8 stages, and the triples manifest counts
-    exactly the rows of the batch's sink partition."""
+    """Each micro-batch runs run_pipeline under the stream's run
+    directory: the lineage lists all 8 stages, and the triples manifest
+    counts exactly the rows of the batch's sink partition."""
     import json
 
     from neuroner_spark.fixtures.gen import alias_df, page_rows
@@ -778,7 +778,7 @@ def test_streaming_batches_write_stage_manifests(spark, tmp_path):
     landing, out, ckpt = (str(tmp_path / d) for d in ("landing", "triples", "ckpt"))
     _stream_pages(spark, page_rows(30)).write.parquet(landing)
     run_streaming_pipeline(spark, landing, out, ckpt, alias_df(spark))
-    with open(os.path.join(ckpt, "kg_runs", "batch_id=0", "lineage.json")) as f:
+    with open(os.path.join(ckpt, "kg_run", "lineage.json")) as f:
         lineage = json.load(f)
     assert [m["stage"] for m in lineage] == [
         "normalized", "tokens", "mentions", "linked",
@@ -787,6 +787,45 @@ def test_streaming_batches_write_stage_manifests(spark, tmp_path):
     n_rows = next(m["n_rows"] for m in lineage if m["stage"] == "triples")
     assert n_rows > 0
     assert n_rows == spark.read.parquet(out).filter(F.col("batch_id") == 0).count()
+
+
+def test_ingest_keeps_one_run_directory(spark, tmp_path):
+    """Resume keys on content, not on directory names: a stream of three
+    micro-batches keeps one run directory, each batch's sink partition
+    holds its own triples manifest, and the fixed dictionary's stages
+    (canonical, entities) resume after micro-batch 0.  Two batch
+    snapshots keep one run directory in their store."""
+    import json
+
+    from neuroner_spark.fixtures.gen import alias_df, page_rows
+    from neuroner_spark.plans.kg_pipeline import run_incremental_kg
+    from neuroner_spark.streaming.ingest import run_streaming_pipeline
+
+    rows = page_rows(30)
+    aliases = alias_df(spark)
+    landing, out, ckpt = (str(tmp_path / d) for d in ("landing", "triples", "ckpt"))
+    for k in range(3):
+        _stream_pages(spark, rows[10 * k : 10 * (k + 1)]).write.mode("append").parquet(landing)
+        run_streaming_pipeline(spark, landing, out, ckpt, aliases)
+    assert [d for d in os.listdir(ckpt) if d.startswith("kg_run")] == ["kg_run"]
+    for k in range(3):
+        part = os.path.join(out, f"batch_id={k}")
+        with open(os.path.join(part, "_manifest.json")) as f:
+            manifest = json.load(f)
+        assert manifest["stage"] == "triples"
+        assert manifest["n_rows"] == spark.read.parquet(part).count()
+    with open(os.path.join(ckpt, "kg_run", "lineage.json")) as f:
+        last = {m["stage"]: m for m in json.load(f)}
+    assert not last["normalized"].get("resumed")
+    assert last["canonical"].get("resumed") and last["entities"].get("resumed")
+
+    store = str(tmp_path / "store")
+    for k in range(2):
+        run_incremental_kg(
+            spark, _stream_pages(spark, rows[15 * k : 15 * (k + 1)]), aliases, store, k
+        )
+    assert sorted(os.listdir(store)) == ["canonical", "dedup", "run", "triples"]
+    assert sorted(os.listdir(os.path.join(store, "triples"))) == ["snapshot=0", "snapshot=1"]
 
 
 def test_streaming_releases_stream_start_canonical(spark, tmp_path, request):
