@@ -1,16 +1,21 @@
-"""Table I/O seam (SURVEY §7 sandbox substitution: Iceberg -> Parquet).
+"""Store I/O: the one module that knows how a stage or snapshot
+partition is written, listed and read.
 
-All stage materialization goes through these two functions so the
-production swap to Iceberg is THIS file only:
+Every store in the package is a directory of Parquet tables:
 
-- parquet (default): plain directory tables, used everywhere in the
-  sandbox (no Iceberg runtime jars present).
-- iceberg: `df.writeTo(table).using("iceberg")` against a configured
-  catalog; stage fingerprints then become snapshot ids (O(1)) instead
-  of one-pass hashes. Selecting it without the runtime raises with the
-  exact spark-submit flags needed.
+- a pipeline stage is ``{run_dir}/<stage>`` (``kg_pipeline.run_stage``
+  writes its ``_manifest.json`` beside the data; Spark and pyarrow skip
+  ``_``-prefixed files);
+- a snapshot store is a set of ``{root}/{prefix}=<id>`` partitions
+  (``snapshot=<k>`` for the canonical, alias-norm, band, decision and
+  triple stores, ``upto=<k>`` for compacted bands, ``batch_id=<n>``
+  for streaming sinks).
 
-Set NEURONER_TABLE_FORMAT=iceberg (plus a catalog config) to switch.
+Writes always overwrite their own directory, so a retried stage or
+snapshot replaces itself, and hand back the frame read from disk, so
+callers never hold the plan that built it.  Plain Parquet, because no
+table-format runtime (e.g. Iceberg) ships with this install; a
+table-format backend would replace the bodies here.
 """
 
 from __future__ import annotations
@@ -20,49 +25,41 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-def _table_format() -> str:
-    # read per call (not at import) so tests and spark-submit wrappers
-    # can flip the format without re-importing the package
-    return os.environ.get("NEURONER_TABLE_FORMAT", "parquet")
+
+def partitions(root: str, prefix: str) -> list[tuple[int, str]]:
+    """Sorted (id, path) for the ``{root}/{prefix}=<id>`` partitions;
+    empty when ``root`` does not exist."""
+    if not os.path.isdir(root):
+        return []
+    out = []
+    for d in os.listdir(root):
+        if d.startswith(prefix + "="):
+            out.append((int(d.split("=")[1]), os.path.join(root, d)))
+    return sorted(out)
 
 
-def _require_iceberg(spark: SparkSession) -> None:
-    try:
-        # attribute access on spark._jvm is lazy (returns a JavaPackage
-        # without touching the classpath) — Class.forName actually loads
-        spark._jvm.java.lang.Class.forName("org.apache.iceberg.spark.SparkCatalog")
-    except Exception as e:
-        raise RuntimeError(
-            "NEURONER_TABLE_FORMAT=iceberg requires the Iceberg Spark "
-            "runtime, e.g. spark-submit --packages "
-            "org.apache.iceberg:iceberg-spark-runtime-4.0_2.13:<ver> "
-            "--conf spark.sql.catalog.kg=org.apache.iceberg.spark.SparkCatalog "
-            "--conf spark.sql.catalog.kg.type=hadoop "
-            "--conf spark.sql.catalog.kg.warehouse=<path>"
-        ) from e
+def write_table(df: DataFrame, path: str, read_back: bool = True) -> DataFrame | None:
+    """Overwrite ``path`` with ``df`` and return the frame read back
+    from it.  ``read_back=False`` skips the read (its schema inference
+    is one Spark job) for a sink this call does not read again."""
+    df.write.mode("overwrite").parquet(path)
+    return read_table(df.sparkSession, path) if read_back else None
 
 
-def write_table(df: DataFrame, path: str, mode: str = "overwrite", partition_by: list[str] | None = None) -> None:
-    if _table_format() == "iceberg":
-        _require_iceberg(df.sparkSession)
-        table = path.replace("/", ".").strip(".")
-        writer = df.writeTo(f"kg.{table}").using("iceberg")
-        if mode == "overwrite":
-            writer.createOrReplace()
-        else:
-            writer.append()
-        return
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
+def read_table(spark: SparkSession, *paths: str, schema=None) -> DataFrame:
+    """One frame over ``paths``; with none given, an empty frame of
+    ``schema``."""
+    if not paths and schema is not None:
+        return local_df(spark, [], schema)
+    return spark.read.parquet(*paths)
 
 
-def read_table(spark: SparkSession, path: str) -> DataFrame:
-    if _table_format() == "iceberg":
-        _require_iceberg(spark)
-        return spark.read.format("iceberg").load("kg." + path.replace("/", ".").strip("."))
-    return spark.read.parquet(path)
+def latest_before(spark: SparkSession, root: str, prefix: str, k: int, schema) -> DataFrame:
+    """The latest ``{root}/{prefix}=<id>`` partition with id < ``k``
+    (a retried snapshot reads the same prior as its first attempt), or
+    an empty frame of ``schema`` when there is none."""
+    prior = [path for pid, path in partitions(root, prefix) if pid < k]
+    return read_table(spark, *prior[-1:], schema=schema)
 
 
 def local_df(spark: SparkSession, rows, schema) -> DataFrame:

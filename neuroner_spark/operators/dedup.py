@@ -19,7 +19,7 @@ Scale notes (the whole point of these shapes):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from neuroner_spark.functions.text_analysis import fingerprint, hash28, hash64, ws_tokens
@@ -55,10 +55,6 @@ def ensure_sharded(docs: DataFrame, id_col: str) -> DataFrame:
     if docs.rdd.getNumPartitions() < max(2, target // 2):
         return docs.repartition(target, F.xxhash64(F.col(id_col)))
     return docs
-
-
-# back-compat alias (pre-r5 name)
-_sharded = ensure_sharded
 
 
 def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -237,10 +233,6 @@ def capped_buckets(banded: DataFrame, keys: list[str], max_bucket: int | None, i
     kept = banded.join(small.select(*keys), keys, "left_semi")
     giants = sizes.filter(F.col("n_docs") > max_bucket)
     return kept, giants
-
-
-# back-compat alias (pre-r5 name)
-_capped_buckets = capped_buckets
 
 
 def band_pairs_from_banded(banded: DataFrame, max_bucket: int | None = 1000) -> DataFrame:

@@ -1,17 +1,18 @@
 """Materialized, checkpointed, resumable CORPUS-PREP pipeline — the
 LLM-training-data composition (exact dedup -> near-dup dedup ->
 benchmark decontamination -> quality/Gopher gates) run the way the KG
-pipeline (``plans/kg_pipeline.py``) runs its stages: every stage
-writes Parquet + ``_manifest.json`` (fingerprint, row count, wall
-seconds, partition histogram) and a rerun with ``resume=True`` skips
-stages whose manifest matches the input fingerprint.
+pipeline (``plans/kg_pipeline.py``) runs its stages, through the same
+``kg_pipeline.run_stage``: every stage writes Parquet +
+``_manifest.json`` (fingerprint, row count, wall seconds, partition
+histogram) and a rerun with ``resume=True`` skips stages whose
+manifest matches the input fingerprint.
 
 Lineage doubles as the no-silent-caps audit trail (r3 ADVICE): the
 ``giant_buckets`` stage materializes every over-``max_bucket`` LSH
 bucket with its size, so a capped run is visible in ``lineage.json``
 (``n_rows`` = number of capped clusters) without querying anything.
 
-Stage graph (all DataFrame -> DataFrame; Iceberg commits in prod):
+Stage graph (all DataFrame -> DataFrame):
 
   docs(doc_id, text, ...)
     -> exact_deduped     keep min doc_id per md5 fingerprint
@@ -48,8 +49,9 @@ Stage graph (all DataFrame -> DataFrame; Iceberg commits in prod):
 
 from __future__ import annotations
 
-import json
 import os
+import shutil
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -61,13 +63,8 @@ from neuroner_spark.operators.dedup import (
     minhash_banded,
     near_dedup_from_banded,
 )
-from neuroner_spark.plans.kg_pipeline import (
-    _fingerprint,
-    _manifest_path,
-    _snapshot_dirs,
-    _try_resume,
-    _write_stage,
-)
+from neuroner_spark.io import partitions, read_table, write_table
+from neuroner_spark.plans.kg_pipeline import input_fingerprint, run_stage, write_lineage
 from neuroner_spark.session import release
 
 
@@ -112,7 +109,6 @@ def run_corpus_prep(
     winnow_min_shared: int = 8,
     winnow_max_bucket: int | None = 1000,
     fast_hash: bool = False,
-    broadcast_gates: bool = True,
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> dict:
@@ -139,43 +135,21 @@ def run_corpus_prep(
     pairing; see ``simhash_near_dedup``).  Same (doc_id, component,
     keep) contract and the same downstream stages either way.
 
-    ``broadcast_gates``: hint-broadcast the id-set side of every gate
-    semi join (keep-ids, quality-ok ids, decontaminated ids).  Without
-    the hint Catalyst estimates the filtered side from the FULL stage
-    table's size and plans SortMergeJoin — whose map side shuffles the
-    whole corpus WITH the text payload before AQE can demote it
-    (measured at 5M docs: the near_deduped stage spent ~18 s in a
-    disk-bound text shuffle that a broadcast avoids entirely, and
-    disk-bound work is why it showed a 1.07x CPU speedup in the
-    two-size run).  Keep True while the survivor id-set fits executor
-    memory (~10^8 longs); at true web scale set False and get the
-    shuffle-free join from bucketed storage instead (Iceberg
-    bucket(doc_id) on the stage tables — the production swap noted in
-    the module docstring).
+    Every gate semi join (keep-ids, quality-ok ids, decontaminated ids)
+    broadcasts its id-set side.  Without the hint Catalyst estimates
+    the filtered side from the FULL stage table's size and plans
+    SortMergeJoin — whose map side shuffles the whole corpus WITH the
+    text payload before AQE can demote it (measured at 5M docs: the
+    near_deduped stage spent ~18 s in a disk-bound text shuffle that a
+    broadcast avoids entirely).  That holds while the survivor id-set
+    fits executor memory (~10^8 longs); beyond it the shuffle-free
+    join comes from tables bucketed by doc_id
+    (``scripts/bucketed_gates_demo.py``).
     """
     os.makedirs(out_dir, exist_ok=True)
     lineage: list[dict] = []
-
-    def _gate(id_frame):
-        return F.broadcast(id_frame) if broadcast_gates else id_frame
-    fp_docs = _fingerprint(docs.select(id_col, text_col), "corpus")
-
-    def stage(name: str, fp: str, build, extra_fn=None):
-        path = os.path.join(out_dir, name)
-        if resume:
-            cached = _try_resume(spark, path, fp, lineage)
-            if cached is not None:
-                return cached
-        out = _write_stage(build(), path, name, fp, lineage)
-        if extra_fn is not None:
-            extra = extra_fn()
-            if extra:
-                # fold build-time detail (e.g. per-CC-iteration walls)
-                # into the stage manifest so a resumed run replays it
-                lineage[-1].update(extra)
-                with open(_manifest_path(path), "w") as f:
-                    json.dump(lineage[-1], f)
-        return out
+    fp_docs = input_fingerprint(docs.select(id_col, text_col), "corpus")
+    stage = partial(run_stage, spark, out_dir, lineage, resume=resume)
 
     exact = stage("exact_deduped", fp_docs + "|exact", lambda: exact_dedup_keep(docs, id_col, text_col))
     fp_base = fp_docs + "|exact"
@@ -263,7 +237,7 @@ def run_corpus_prep(
         "near_deduped",
         fp_cap + "|kept",
         lambda: exact.join(
-            _gate(components.filter(F.col("keep")).select(F.col("doc_id").alias(id_col))),
+            F.broadcast(components.filter(F.col("keep")).select(F.col("doc_id").alias(id_col))),
             id_col,
             "left_semi",
         ),
@@ -339,7 +313,7 @@ def run_corpus_prep(
             "winnow_deduped",
             fp_win_cc + "|kept",
             lambda: near_in_w.join(
-                _gate(win_comp.filter(F.col("keep")).select(F.col("doc_id").alias(id_col))),
+                F.broadcast(win_comp.filter(F.col("keep")).select(F.col("doc_id").alias(id_col))),
                 id_col,
                 "left_semi",
             ),
@@ -364,7 +338,7 @@ def run_corpus_prep(
     contamination = None
     fp_final = fp_doc_set
     if benchmark is not None:
-        fp_bench = _fingerprint(benchmark.select(text_col), "bench")
+        fp_bench = input_fingerprint(benchmark.select(text_col), "bench")
         fp_contam = (
             fp_doc_set + f"|contam:{fp_bench}:n={contamination_n}:t={contamination_threshold}"
         )
@@ -423,22 +397,21 @@ def run_corpus_prep(
         ok = quality.filter(
             (F.col("quality") >= min_quality) & (~F.col("repetition_flagged"))
         ).select(F.col("doc_id").alias(id_col))
-        kept = near.join(_gate(ok), id_col, "left_semi")
+        kept = near.join(F.broadcast(ok), id_col, "left_semi")
         if contamination is not None:
             clean = contamination.filter(~F.col("flagged")).select(
                 F.col("doc_id").alias(id_col)
             )
-            kept = kept.join(_gate(clean), id_col, "left_semi")
+            kept = kept.join(F.broadcast(clean), id_col, "left_semi")
         if lm_scores is not None:
             lm_ok = lm_scores.filter(
                 F.col("avg_nll_bits").isNull() | (F.col("avg_nll_bits") <= lm_max_bits)
             ).select(F.col("doc_id").alias(id_col))
-            kept = kept.join(_gate(lm_ok), id_col, "left_semi")
+            kept = kept.join(F.broadcast(lm_ok), id_col, "left_semi")
         return kept
 
     corpus = stage("corpus", fp_final + f"|q>={min_quality}", build_corpus)
-    with open(os.path.join(out_dir, "lineage.json"), "w") as f:
-        json.dump(lineage, f, indent=1)
+    write_lineage(out_dir, lineage)
     return {
         "corpus": corpus,
         "components": components,
@@ -457,10 +430,10 @@ def _band_store_inputs(store_dir: str, exclude_snapshot: int | None = None) -> l
     partitions <= the compaction watermark are skipped even when not
     yet pruned — reading them too would be correct (the index agg is a
     min, so covered rows are idempotent) but wasted IO."""
-    comps = _snapshot_dirs(os.path.join(store_dir, "compacted"), "upto")
+    comps = partitions(os.path.join(store_dir, "compacted"), "upto")
     watermark = comps[-1][0] if comps else -1
     paths = [comps[-1][1]] if comps else []
-    for sid, p in _snapshot_dirs(os.path.join(store_dir, "bands"), "snapshot"):
+    for sid, p in partitions(os.path.join(store_dir, "bands"), "snapshot"):
         if sid > watermark and sid != exclude_snapshot:
             paths.append(p)
     return paths
@@ -497,8 +470,8 @@ def compact_band_store(
     are the audit record).  Returns {'upto', 'n_band_keys',
     'n_raw_rows', 'n_pruned_dirs'}.
     """
-    raw = _snapshot_dirs(os.path.join(store_dir, "bands"), "snapshot")
-    comps = _snapshot_dirs(os.path.join(store_dir, "compacted"), "upto")
+    raw = partitions(os.path.join(store_dir, "bands"), "snapshot")
+    comps = partitions(os.path.join(store_dir, "compacted"), "upto")
     watermark = comps[-1][0] if comps else -1
     if upto_snapshot_id is None:
         upto_snapshot_id = max([watermark] + [sid for sid, _ in raw])
@@ -507,18 +480,16 @@ def compact_band_store(
     ]
     if not inputs:
         return {"upto": upto_snapshot_id, "n_band_keys": 0, "n_raw_rows": 0, "n_pruned_dirs": 0}
-    covered = spark.read.parquet(*inputs)
+    covered = read_table(spark, *inputs)
     n_raw = covered.count()
     compacted = covered.groupBy("band_id", "band_hash").agg(
         F.min("doc_id").alias("doc_id")
     ).select("doc_id", "band_id", "band_hash")
-    out_dir = os.path.join(store_dir, "compacted", f"upto={upto_snapshot_id}")
-    compacted.write.mode("overwrite").parquet(out_dir)
-    n_keys = spark.read.parquet(out_dir).count()
+    n_keys = write_table(
+        compacted, os.path.join(store_dir, "compacted", f"upto={upto_snapshot_id}")
+    ).count()
     n_pruned = 0
     if prune:
-        import shutil
-
         for sid, p in raw:
             if sid <= upto_snapshot_id:
                 shutil.rmtree(p)
@@ -577,24 +548,20 @@ def run_incremental_snapshot(
     survivors only.  New snapshots never rescan old text."""
     from neuroner_spark.operators.dedup import incremental_near_dedup, minhash_banded
 
-    bands_root = os.path.join(store_dir, "bands")
-    prior_paths = _band_store_inputs(store_dir, exclude_snapshot=snapshot_id)
-    if prior_paths:
-        corpus_banded = spark.read.parquet(*prior_paths)
-    else:
-        from neuroner_spark.io import local_df
-
-        corpus_banded = local_df(
-            spark, [], "doc_id long, band_id int, band_hash long"
-        )
+    corpus_banded = read_table(
+        spark,
+        *_band_store_inputs(store_dir, exclude_snapshot=snapshot_id),
+        schema="doc_id long, band_id int, band_hash long",
+    )
     # lazy persist, not localCheckpoint: the decisions plan's first scan
     # fills it, so it costs no job of its own.  The banded frame is
     # reused by the decisions plan and the store append, then released;
     # decisions themselves round-trip through their own idempotent
     # partition, so the returned frame is DISK-BACKED and pins nothing.
     banded_new = minhash_banded(new_docs, n, bands, id_col, text_col, fast_hash).persist()
+    part = f"snapshot={snapshot_id}"
     try:
-        incremental_near_dedup(
+        decided = incremental_near_dedup(
             new_docs,
             corpus_banded,
             n=n,
@@ -605,16 +572,14 @@ def run_incremental_snapshot(
             fast_hash=fast_hash,
             new_banded=banded_new,
             iteration_log=iteration_log,
-        ).write.mode("overwrite").parquet(
-            os.path.join(store_dir, "decisions", f"snapshot={snapshot_id}")
         )
-        decisions = spark.read.parquet(
-            os.path.join(store_dir, "decisions", f"snapshot={snapshot_id}")
-        )
+        decisions = write_table(decided, os.path.join(store_dir, "decisions", part))
         kept_ids = decisions.filter(F.col("status") == "kept").select("doc_id")
-        banded_new.join(F.broadcast(kept_ids), "doc_id", "left_semi").write.mode(
-            "overwrite"
-        ).parquet(os.path.join(bands_root, f"snapshot={snapshot_id}"))
+        write_table(
+            banded_new.join(F.broadcast(kept_ids), "doc_id", "left_semi"),
+            os.path.join(store_dir, "bands", part),
+            read_back=False,
+        )
     finally:
         release(banded_new)
     counts = {r["status"]: r["n"] for r in decisions.groupBy("status").agg(F.count("*").alias("n")).collect()}

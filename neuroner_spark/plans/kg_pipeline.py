@@ -10,13 +10,14 @@ pages(url, warc_ts, html, text, lang)
   -> same-as edges + connected-components canonicalization (J10)
   -> triples(subj, pred, obj, url, warc_ts)  [+ entities, edges tables]
 
-Every stage is DataFrame -> DataFrame; each materialized stage writes
-Parquet + ``_manifest.json`` (stage, input fingerprint, row count,
-wall seconds, partitions). A rerun with ``resume=True`` skips stages
-whose manifest matches its input fingerprint — the K4 checkpoint
-analog, and the north_rule's resume-from-checkpoint requirement. In
-production the Parquet writes become Iceberg table commits; the API
-boundary is this module so the swap is `.format("iceberg")` one-liners.
+Every stage is DataFrame -> DataFrame; ``run_stage`` materializes
+each one through ``io.write_table`` with a ``_manifest.json`` beside
+it (stage, input fingerprint, row count, wall seconds, partitions). A
+rerun with ``resume=True`` skips stages whose manifest matches its
+input fingerprint — the K4 checkpoint analog, and the north_rule's
+resume-from-checkpoint requirement. ``run_corpus_prep`` runs its
+stages through the same ``run_stage``; the snapshot stores below
+write, list and read their partitions through ``neuroner_spark.io``.
 
 Triple predicates (deterministic, FIXTURES.md §4):
   same_sentence_as  both mentions in one sentence
@@ -36,11 +37,12 @@ from __future__ import annotations
 import json
 import os
 import time
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from neuroner_spark.io import read_table, write_table
+from neuroner_spark.io import latest_before, local_df, partitions, read_table, write_table
 from neuroner_spark.functions.normalize import normalize_whitespace
 from neuroner_spark.functions.tokenize import tokenize
 from neuroner_spark.operators.components import connected_components
@@ -65,25 +67,6 @@ DEFAULT_VERB_LEXICON = ["agg", "batch", "filter", "group", "order", "plan", "que
 # (and the bound keeps the per-sentence pair fan-out linear-ish even
 # on entity-dense directory pages)
 VERB_MAX_GAP = 8
-
-
-def _manifest_path(path: str) -> str:
-    """A stage's manifest sits beside its data; Spark and pyarrow both
-    skip ``_``-prefixed files, so the directory reads as plain Parquet."""
-    return os.path.join(path, "_manifest.json")
-
-
-def _snapshot_dirs(root: str, prefix: str) -> list[tuple[int, str]]:
-    """Sorted (id, path) for ``{root}/{prefix}=<id>`` partitions — the
-    one place the snapshot-store layout is parsed (shared by the
-    dedup band store, the canonical store, and the alias-norm store)."""
-    if not os.path.isdir(root):
-        return []
-    out = []
-    for d in os.listdir(root):
-        if d.startswith(prefix + "="):
-            out.append((int(d.split("=")[1]), os.path.join(root, d)))
-    return sorted(out)
 
 
 def _scan(df: DataFrame, content_hash: bool = False) -> dict:
@@ -119,35 +102,57 @@ def _record(stage: str, fingerprint: str, stats: dict, t0: float, lineage: list[
     return manifest
 
 
-def _write_stage(df: DataFrame, path: str, stage: str, fingerprint: str, lineage: list[dict]) -> DataFrame:
+def input_fingerprint(df: DataFrame, extra: str = "") -> str:
+    """Cheap input fingerprint: row count + order-insensitive row hash.
+    One scan; a table format with snapshot ids would make it O(1)."""
+    scan = _scan(df, content_hash=True)
+    return f"{scan['n_rows']}:{scan['hash']}:{extra}"
+
+
+def run_stage(
+    spark: SparkSession,
+    out_dir: str,
+    lineage: list[dict],
+    name: str,
+    fingerprint: str,
+    build,
+    resume: bool = True,
+    path: str | None = None,
+    extra_fn=None,
+) -> DataFrame:
+    """One checkpointed pipeline stage, shared by ``run_pipeline`` and
+    ``run_corpus_prep``: resume ``path`` (default ``{out_dir}/<name>``)
+    when its manifest holds ``fingerprint``; otherwise write
+    ``build()`` there and record its manifest in ``lineage`` and beside
+    the data.  ``extra_fn`` returns build-time detail (e.g. per-CC-
+    iteration walls) folded into the manifest before its one write, so
+    a resumed run replays it."""
+    path = path or os.path.join(out_dir, name)
+    # the manifest sits beside its data; Spark and pyarrow both skip
+    # ``_``-prefixed files, so the directory reads as plain Parquet
+    manifest_path = os.path.join(path, "_manifest.json")
+    if resume and os.path.exists(manifest_path):
+        with open(manifest_path) as f:
+            manifest = json.load(f)
+        if manifest.get("fingerprint") == fingerprint:
+            manifest["resumed"] = True
+            lineage.append(manifest)
+            return read_table(spark, path)
+    df = build()
     t0 = time.time()
-    write_table(df, path)
-    out = read_table(df.sparkSession, path)
-    manifest = _record(stage, fingerprint, _scan(out), t0, lineage)
-    with open(_manifest_path(path), "w") as f:
+    out = write_table(df, path)
+    manifest = _record(name, fingerprint, _scan(out), t0, lineage)
+    if extra_fn is not None:
+        manifest.update(extra_fn() or {})
+    with open(manifest_path, "w") as f:
         json.dump(manifest, f)
     return out
 
 
-def _try_resume(spark: SparkSession, path: str, fingerprint: str, lineage: list[dict]) -> DataFrame | None:
-    mp = _manifest_path(path)
-    if not os.path.exists(mp):
-        return None
-    with open(mp) as f:
-        manifest = json.load(f)
-    if manifest.get("fingerprint") != fingerprint:
-        return None
-    manifest["resumed"] = True
-    lineage.append(manifest)
-    return read_table(spark, path)
-
-
-def _fingerprint(df: DataFrame, extra: str = "") -> str:
-    """Cheap input fingerprint: row count + order-insensitive row hash.
-    One scan; at 10^12 scale swap for the Iceberg snapshot id (same
-    call site, O(1))."""
-    scan = _scan(df, content_hash=True)
-    return f"{scan['n_rows']}:{scan['hash']}:{extra}"
+def write_lineage(out_dir: str, lineage: list[dict]) -> None:
+    """A run's ``lineage.json``: every stage manifest, in run order."""
+    with open(os.path.join(out_dir, "lineage.json"), "w") as f:
+        json.dump(lineage, f, indent=1)
 
 
 def normalize_pages(pages: DataFrame) -> DataFrame:
@@ -203,7 +208,7 @@ def canonical_map(alias_dict: DataFrame, small_threshold: int = 100_000) -> Data
     The alias dictionary is the broadcast-SMALL side by contract, so
     the default path collects the (alias_norm, entity_id) rows in ONE
     job and does the whole thing driver-side — grouping, union-find,
-    and the singleton fill — returning one broadcast createDataFrame.
+    and the singleton fill — returning one local createDataFrame.
     (The previous shape built the edge set as a Spark shuffle plus a
     separate distinct+join for singletons: ~0.9 s of scheduler latency
     for a 12-row dictionary at sf0.1.)  Dictionaries above
@@ -248,16 +253,14 @@ def canonical_map(alias_dict: DataFrame, small_threshold: int = 100_000) -> Data
         ]
         # local_df (r7): the mapping is broadcast-joined by every
         # triples caller — a LocalRelation build keeps the broadcast
-        # off the Python-RDD evaluation path (~0.3 s/build at local[32])
-        from neuroner_spark.io import local_df
-
-        comp = local_df(
+        # off the Python-RDD evaluation path (~0.3 s/build at local[32]).
+        # No hint here: each consumer broadcasts ``canon`` in its own
+        # join, and a hint outside a join only logs a HintErrorLogger
+        # warning when the frame is written as a stage
+        return local_df(
             spark, mapping or [(None, None)], "entity_id long, canonical_id long"
         ).filter(F.col("entity_id").isNotNull())
-        return F.broadcast(comp)  # bounded by small_threshold — safe to ship
     # pragma: no cover - exercised via connected_components oracle
-    # NO broadcast hint here: the distributed fallback exists for
-    # component maps too big for the driver/executor memory
     edges = sameas_edges_from_aliases(alias_dict)
     comp = connected_components(edges).select(
         F.col("node").alias("entity_id"), F.col("component").alias("canonical_id")
@@ -403,8 +406,6 @@ def verb_triples_from_mentions(
     if type_constraints is not None:
         cons = type_constraints
         if not isinstance(cons, DataFrame):
-            from neuroner_spark.io import local_df
-
             cons = local_df(
                 m.sparkSession, list(cons), "vtok string, subj_type string, obj_type string"
             )
@@ -644,16 +645,9 @@ def run_pipeline(
     lineage: list[dict] = []
     # content-sensitive: url alone would serve stale stages when a page
     # is re-crawled with new text under the same url
-    fp_pages = _fingerprint(pages.select("url", "warc_ts", "text"), "pages")
-    fp_alias = _fingerprint(alias_dict.select("alias_norm", "entity_id"), "alias")
-
-    def stage(name: str, fp: str, build, path: str | None = None):
-        path = path or os.path.join(out_dir, name)
-        if resume:
-            cached = _try_resume(spark, path, fp, lineage)
-            if cached is not None:
-                return cached
-        return _write_stage(build(), path, name, fp, lineage)
+    fp_pages = input_fingerprint(pages.select("url", "warc_ts", "text"), "pages")
+    fp_alias = input_fingerprint(alias_dict.select("alias_norm", "entity_id"), "alias")
+    stage = partial(run_stage, spark, out_dir, lineage, resume=resume)
 
     # reference `tokenizer` INI param: resolve the name to an injected
     # fn (None = pinned-regex fast path); a tokenizer switch invalidates
@@ -689,8 +683,9 @@ def run_pipeline(
     )
     if canonical is not None:
         # injected mapping, used in place: a new issued mapping changes
-        # the fingerprint (same form as _fingerprint) and so invalidates
-        # everything downstream; the same scan gives the lineage record
+        # the fingerprint (same form as input_fingerprint) and so
+        # invalidates everything downstream; the same scan gives the
+        # lineage record
         t0 = time.time()
         scan = _scan(canonical, content_hash=True)
         fp_canon = f"{scan['n_rows']}:{scan.pop('hash')}:injected"
@@ -744,8 +739,7 @@ def run_pipeline(
             F.countDistinct("alias_norm").alias("n_aliases"),
         ),
     )
-    with open(os.path.join(out_dir, "lineage.json"), "w") as f:
-        json.dump(lineage, f, indent=1)
+    write_lineage(out_dir, lineage)
     return {
         "triples": triples,
         "entities": entities,
@@ -768,7 +762,7 @@ def run_incremental_canonical(
 
     Layout (each write OVERWRITES its own snapshot partition, so a
     retried snapshot replaces itself — the same idempotence contract
-    as the dedup store; in production these are Iceberg partitions):
+    as the dedup store; written through ``neuroner_spark.io``):
       {store_dir}/mapping/snapshot=<k>/     (entity_id, canonical_id)
                                             COMPLETE issued mapping
       {store_dir}/superseded/snapshot=<k>/  (old_canonical_id,
@@ -788,23 +782,16 @@ def run_incremental_canonical(
     from neuroner_spark.operators.components import merge_canonical_snapshots
 
     map_root = os.path.join(store_dir, "mapping")
-    prior_snaps = [
-        (sid, path) for sid, path in _snapshot_dirs(map_root, "snapshot") if sid < snapshot_id
-    ]
-    if prior_snaps:
-        prior = spark.read.parquet(prior_snaps[-1][1])
-    else:
-        from neuroner_spark.io import local_df
-
-        prior = local_df(spark, [], "entity_id long, canonical_id long")
+    prior = latest_before(
+        spark, map_root, "snapshot", snapshot_id, "entity_id long, canonical_id long"
+    )
     out = merge_canonical_snapshots(prior, new_edges)
-    map_dir = os.path.join(map_root, f"snapshot={snapshot_id}")
-    sup_dir = os.path.join(store_dir, "superseded", f"snapshot={snapshot_id}")
-    out["mapping"].write.mode("overwrite").parquet(map_dir)
-    out["superseded"].write.mode("overwrite").parquet(sup_dir)
+    part = f"snapshot={snapshot_id}"
     return {
-        "mapping": spark.read.parquet(map_dir),
-        "superseded": spark.read.parquet(sup_dir),
+        "mapping": write_table(out["mapping"], os.path.join(map_root, part)),
+        "superseded": write_table(
+            out["superseded"], os.path.join(store_dir, "superseded", part)
+        ),
     }
 
 
@@ -823,7 +810,7 @@ def prune_canonical_store(store_dir: str, keep_latest: int = 2) -> int:
     Returns the number of directories removed."""
     import shutil
 
-    snaps = _snapshot_dirs(os.path.join(store_dir, "mapping"), "snapshot")
+    snaps = partitions(os.path.join(store_dir, "mapping"), "snapshot")
     n = 0
     for _sid, path in snaps[: max(0, len(snaps) - keep_latest)]:
         shutil.rmtree(path)
@@ -883,12 +870,10 @@ def _resolved_superseded(spark: SparkSession, canon_store: str) -> DataFrame | N
     driver-side (the chain old -> mid -> new must resolve to old ->
     new for a single-join re-key).  The table is merge-retirement-
     sized — tiny by construction — so the collect is bounded."""
-    parts = [
-        p for _sid, p in _snapshot_dirs(os.path.join(canon_store, "superseded"), "snapshot")
-    ]
+    parts = [p for _sid, p in partitions(os.path.join(canon_store, "superseded"), "snapshot")]
     if not parts:
         return None
-    rows = spark.read.parquet(*parts).collect()
+    rows = read_table(spark, *parts).collect()
     if not rows:
         return None
     nxt = {int(r["old_canonical_id"]): int(r["canonical_id"]) for r in rows}
@@ -901,8 +886,6 @@ def _resolved_superseded(spark: SparkSession, canon_store: str) -> DataFrame | N
         return x
 
     resolved = [(o, final(o)) for o in nxt]
-    from neuroner_spark.io import local_df
-
     return local_df(spark, resolved, "old_canonical_id long, canonical_id long")
 
 
@@ -914,12 +897,12 @@ def read_kg_triples(spark: SparkSession, store_dir: str) -> DataFrame:
     every read sees current canonical ids; materialize the view
     periodically if read amplification matters."""
     root = os.path.join(store_dir, "triples")
-    parts = [p for _sid, p in _snapshot_dirs(root, "snapshot")]
+    parts = [p for _sid, p in partitions(root, "snapshot")]
     if not parts:
         raise FileNotFoundError(
             f"no triple snapshots under {root} — run run_incremental_kg first"
         )
-    triples = spark.read.parquet(*parts)
+    triples = read_table(spark, *parts)
     resolved = _resolved_superseded(spark, os.path.join(store_dir, "canonical"))
     if resolved is None:
         return triples
@@ -1065,15 +1048,9 @@ def run_incremental_aliases(
     Returns {'edges', 'norms', 'n_new_norms'}.
     """
     root = os.path.join(store_dir, "alias_norms")
-    prior_snaps = [
-        (sid, path) for sid, path in _snapshot_dirs(root, "snapshot") if sid < snapshot_id
-    ]
-    if prior_snaps:
-        prior = spark.read.parquet(prior_snaps[-1][1])
-    else:
-        from neuroner_spark.io import local_df
-
-        prior = local_df(spark, [], "alias_norm string, min_entity long")
+    prior = latest_before(
+        spark, root, "snapshot", snapshot_id, "alias_norm string, min_entity long"
+    )
     batch = (
         alias_increment.select("alias_norm", F.col("entity_id").cast("long"))
         .groupBy("alias_norm")
@@ -1106,8 +1083,6 @@ def run_incremental_aliases(
         .groupBy("alias_norm")
         .agg(F.min("min_entity").alias("min_entity"))
     )
-    out_dir = os.path.join(root, f"snapshot={snapshot_id}")
-    merged.write.mode("overwrite").parquet(out_dir)
-    norms = spark.read.parquet(out_dir)
-    n_new = norms.count() - (prior.count() if prior_snaps else 0)
+    norms = write_table(merged, os.path.join(root, f"snapshot={snapshot_id}"))
+    n_new = norms.count() - prior.count()
     return {"edges": edges, "norms": norms, "n_new_norms": n_new}

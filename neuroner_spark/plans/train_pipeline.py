@@ -29,6 +29,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from neuroner_spark.io import write_table
+
 
 def run_training_run(
     spark: SparkSession,
@@ -66,8 +68,7 @@ def run_training_run(
         spark, valid_tokens, best, use_crf=(res.get("loss_mode") == "crf")
     )
     pred_dir = os.path.join(out_dir, "predictions", "valid")
-    joined.write.mode("overwrite").parquet(pred_dir)
-    preds = spark.read.parquet(pred_dir)
+    preds = write_table(joined, pred_dir)
     write_conll(
         preds.select("doc_id", "sent_id", "pos", "token", F.col("gold").alias("label"), "pred"),
         os.path.join(out_dir, "predictions", "valid_conll"),
@@ -75,8 +76,7 @@ def run_training_run(
     )
 
     # K3: metrics table + results.json
-    f1_df = conlleval_f1(preds, "gold", "pred")
-    f1_df.write.mode("overwrite").parquet(os.path.join(out_dir, "metrics"))
+    f1_df = write_table(conlleval_f1(preds, "gold", "pred"), os.path.join(out_dir, "metrics"))
     f1_rows = {r["type"]: r.asDict() for r in f1_df.collect()}
     results = {
         "history": res["history"],

@@ -166,9 +166,9 @@ def run_streaming_pipeline(
     import os
 
     from neuroner_spark.functions.text_analysis import quality_score
+    from neuroner_spark.io import partitions, read_table, write_table
     from neuroner_spark.operators.dedup import benchmark_contamination
     from neuroner_spark.plans.kg_pipeline import (
-        _snapshot_dirs,
         near_dup_decisions,
         run_incremental_canonical,
         run_pipeline,
@@ -182,16 +182,12 @@ def run_streaming_pipeline(
         raise ValueError("incremental_canonical requires canonical_store_dir")
     canon = None  # run_pipeline's canonical_map, or merged per batch
     if canonical_store_dir is not None and not incremental_canonical:
-        snaps = _snapshot_dirs(
-            os.path.join(canonical_store_dir, "mapping"), "snapshot"
-        )
+        snaps = partitions(os.path.join(canonical_store_dir, "mapping"), "snapshot")
         if not snaps:
             raise FileNotFoundError(
                 f"no mapping snapshots under {canonical_store_dir}/mapping"
             )
-        issued = spark.read.parquet(snaps[-1][1]).withColumnRenamed(
-            "canonical_id", "_c"
-        )
+        issued = read_table(spark, snaps[-1][1]).withColumnRenamed("canonical_id", "_c")
         canon = (
             alias_dict.select("entity_id")
             .distinct()
@@ -260,8 +256,8 @@ def run_streaming_pipeline(
                 rejects = gated.filter(F.col("_reject_reason").isNotNull()).select(
                     "url", "warc_ts", "lang", F.col("_reject_reason").alias("reject_reason")
                 )
-                rejects.write.mode("overwrite").parquet(
-                    os.path.join(rejects_dir, f"batch_id={batch_id}")
+                write_table(
+                    rejects, os.path.join(rejects_dir, f"batch_id={batch_id}"), read_back=False
                 )
             batch_df = gated.filter(F.col("_reject_reason").isNull()).drop(
                 "_quality", "_contaminated", "_reject_reason"
@@ -312,12 +308,13 @@ def read_streaming_triples(
     and this reader resolves them at read time.  The resolved
     retirement table is merge-sized (broadcast in ``rekey_triples``),
     so the view adds no shuffle over the store scan."""
+    from neuroner_spark.io import read_table
     from neuroner_spark.plans.kg_pipeline import (
         _resolved_superseded,
         rekey_triples,
     )
 
-    triples = spark.read.parquet(out_dir)
+    triples = read_table(spark, out_dir)
     resolved = _resolved_superseded(spark, canonical_store_dir)
     if resolved is None:
         return triples

@@ -1,8 +1,8 @@
 """Bucketed-table gate joins: the no-broadcast answer at 10^12 docs,
 demonstrated and measured (round-6 candidate #2, done early).
 
-``run_corpus_prep(broadcast_gates=True)`` fixes the gate semi joins
-while the survivor id-set fits executor memory.  At true web scale it
+``run_corpus_prep`` broadcasts the id-set side of every gate semi
+join, which holds while the survivor id-set fits executor memory.  At true web scale it
 does not fit — the promised production answer is bucketed storage:
 write the corpus table AND the components table bucketed by doc_id
 (Iceberg ``bucket(N, doc_id)`` partition transform; plain Spark
@@ -16,7 +16,7 @@ gate semi join three ways on a 5M-doc corpus:
 
   plain parquet + broadcast disabled   -> SMJ, full text shuffle
   bucketed tables + broadcast disabled -> SMJ, zero Exchange (asserted)
-  plain parquet + broadcast hint       -> the broadcast_gates path
+  plain parquet + broadcast hint       -> run_corpus_prep's gate path
 
 Writes BENCH/bucketed_gates.json.
 
@@ -80,7 +80,7 @@ def main() -> None:
     out_dir = tempfile.mkdtemp(prefix="gate_out_")
 
     def timed(join_df):
-        # WRITE the output like the pipeline's _write_stage does — a
+        # WRITE the output like the pipeline's run_stage does — a
         # count() would let Catalyst prune the text column and the
         # plain path's text shuffle would never run (measured: 2.9 s
         # "plain SMJ" that was really a doc_id-only join)

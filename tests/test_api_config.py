@@ -73,25 +73,6 @@ def test_config_compat_check(tmp_path):
         load_parameters(None, overrides={"token_embedding_dimension": "300"})
 
 
-def test_iceberg_format_raises_actionable_error(spark, tmp_path, monkeypatch):
-    """NEURONER_TABLE_FORMAT=iceberg without the runtime jars must fail
-    with the documented spark-submit instructions, not an opaque JVM
-    error (io.py is the one-file Iceberg swap seam)."""
-    import pytest
-
-    from neuroner_spark.io import read_table, write_table
-
-    df = spark.range(3)
-    monkeypatch.setenv("NEURONER_TABLE_FORMAT", "iceberg")
-    with pytest.raises(RuntimeError, match="iceberg-spark-runtime"):
-        write_table(df, str(tmp_path / "t"))
-    with pytest.raises(RuntimeError, match="iceberg-spark-runtime"):
-        read_table(spark, str(tmp_path / "t"))
-    monkeypatch.setenv("NEURONER_TABLE_FORMAT", "parquet")
-    write_table(df, str(tmp_path / "t2"))
-    assert read_table(spark, str(tmp_path / "t2")).count() == 3
-
-
 def test_fit_reads_ini_hyperparameters(spark, tmp_path):
     """Entry point 1: fit() consumes the reference INI training keys
     (maximum_number_of_epochs / learning_rate / patience / clip) and

@@ -75,6 +75,17 @@ def test_canonical_map_distributed_fallback_parity(spark):
     assert small == dist and len(small) > 0
 
 
+def test_canonical_map_carries_no_join_hint(spark):
+    """The driver-side mapping is returned without a broadcast hint:
+    every consumer broadcasts ``canon`` in its own join, and a hint
+    outside a join (the mapping written as a pipeline stage) only logs
+    a HintErrorLogger warning."""
+    from neuroner_spark.plans.kg_pipeline import canonical_map
+
+    analyzed = canonical_map(alias_df(spark))._jdf.queryExecution().analyzed()
+    assert "ResolvedHint" not in analyzed.toString()
+
+
 def test_gazetteer_greedy_nonoverlap(spark):
     """overlap='greedy' enforces strict left-to-right non-overlap on
     staggered matches; the default containment mode keeps both (oracle
@@ -676,6 +687,30 @@ def test_incremental_alias_ingestion(spark, tmp_path):
     assert e2 == {(20, 33)}
     n2 = {r["alias_norm"]: r["min_entity"] for r in r2["norms"].collect()}
     assert n2 == {"acme": 7, "beta": 20}  # acme carried forward untouched
+
+
+def test_incremental_alias_retry_reads_prior_before_it(spark, tmp_path):
+    """Retrying snapshot 1 after snapshot 2 exists reads its prior from
+    snapshot 0, not from the later snapshot 2, so the retry reproduces
+    snapshot 1's first edges and norms."""
+    from neuroner_spark.plans.kg_pipeline import run_incremental_aliases
+
+    store = str(tmp_path / "alias_store")
+
+    def inc(rows):
+        return spark.createDataFrame(rows, "alias_norm string, entity_id long")
+
+    def result(r):
+        edges = {(e["src"], e["dst"]) for e in r["edges"].collect()}
+        norms = {n["alias_norm"]: n["min_entity"] for n in r["norms"].collect()}
+        return edges, norms, r["n_new_norms"]
+
+    run_incremental_aliases(spark, inc([("acme", 12), ("acme", 10), ("beta", 20)]), store, 0)
+    batch1 = [("acme", 7), ("gamma", 40), ("gamma", 41)]
+    first = result(run_incremental_aliases(spark, inc(batch1), store, 1))
+    assert first == ({(7, 10), (40, 41)}, {"acme": 7, "beta": 20, "gamma": 40}, 1)
+    run_incremental_aliases(spark, inc([("acme", 3), ("delta", 50)]), store, 2)
+    assert result(run_incremental_aliases(spark, inc(batch1), store, 1)) == first
 
 
 def test_prune_canonical_store(spark, tmp_path):
