@@ -38,12 +38,13 @@ def partitions(root: str, prefix: str) -> list[tuple[int, str]]:
     return sorted(out)
 
 
-def write_table(df: DataFrame, path: str, read_back: bool = True) -> DataFrame | None:
+def write_table(df: DataFrame, path: str) -> DataFrame:
     """Overwrite ``path`` with ``df`` and return the frame read back
-    from it.  ``read_back=False`` skips the read (its schema inference
-    is one Spark job) for a sink this call does not read again."""
+    from it.  The read takes ``df``'s schema instead of inferring it
+    from the files (inference is one Spark job), so the read-back runs
+    no job; Spark reads every file-source field as nullable either way."""
     df.write.mode("overwrite").parquet(path)
-    return read_table(df.sparkSession, path) if read_back else None
+    return df.sparkSession.read.schema(df.schema).parquet(path)
 
 
 def read_table(spark: SparkSession, *paths: str, schema=None) -> DataFrame:

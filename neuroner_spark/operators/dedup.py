@@ -15,6 +15,29 @@ Scale notes (the whole point of these shapes):
 - Frequent-shingle blowup (stopword shingles shared by millions of
   docs) is capped by dropping shingles with document-frequency above
   ``max_df`` — standard LSH practice and essential at 100 TB.
+
+Bucket-pairing kernel.  Every near-dup family (minhash bands, simhash
+blocks, winnowing fingerprints here; hyperplane-LSH tables and
+embedding blocks in ``similarity``) turns its bucketed frame into
+clusters with the same three functions:
+
+- ``capped_pairs``: one sizes aggregation splits buckets on
+  ``max_bucket`` (``capped_buckets``); the within-cap rows join
+  themselves on the bucket keys with a < b, carrying any columns the
+  family's post-filter reads (band count, Hamming verify,
+  ``min_shared``, cosine).
+- ``star_edges``: each member of an over-cap bucket links to the
+  bucket's ``keep_id`` (its min id) — O(bucket) rows, never pairs.
+- ``keep_one``: connected components over the edges, then one row per
+  id with component = min member and keep = (component == id).
+
+Over-cap buckets follow one of two rules, chosen by calling
+``star_edges`` or not.  Minhash bands and LSH tables encode whole-doc
+(whole-vector) similarity, so an over-cap bucket IS one duplicate
+cluster and is star-edged.  Simhash blocks and winnowing fingerprints
+witness only part of a doc (a block of signature bits, a short
+substring), so an over-cap bucket is key-space saturation or a common
+phrase and is dropped; it surfaces in the family's giant side output.
 """
 
 from __future__ import annotations
@@ -23,6 +46,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from neuroner_spark.functions.text_analysis import fingerprint, hash28, hash64, ws_tokens
+from neuroner_spark.operators.components import connected_components
 
 # Prime 2^31-1 for the universal-hash family (a*x+b) mod p over 28-bit
 # inputs: a < 2^31, x < 2^28 keeps a*x < 2^59 — no int64 overflow under
@@ -209,12 +233,11 @@ def capped_buckets(banded: DataFrame, keys: list[str], max_bucket: int | None, i
     size, and web corpora have ~10^6-member boilerplate duplicate
     clusters — one hot band would emit 10^11 pairs.  Buckets above
     ``max_bucket`` are therefore never paired; they surface in the
-    giant-bucket side output (the whole bucket IS one duplicate
-    cluster — downstream keeps min(doc_id) and drops the rest, no
-    pairs needed).
+    giant-bucket side output (n_docs, keep_id = min id), which each
+    family either star-edges or drops (module docstring).
 
-    Public utility — the hyperplane-LSH similarity operators reuse it
-    with (table, sig) keys.
+    Public utility — ``capped_pairs``, ``star_edges`` and every
+    family's giant side output are built on it.
 
     r6 ingest-floor fix: ONE sizes aggregation carries both the count
     (the cap predicate) and min(id) (the giants' keep_id) — the
@@ -235,17 +258,75 @@ def capped_buckets(banded: DataFrame, keys: list[str], max_bucket: int | None, i
     return kept, giants
 
 
+def capped_pairs(
+    bucketed: DataFrame,
+    keys: list[str],
+    max_bucket: int | None,
+    carry: tuple[str, ...] = (),
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """The within-cap rows of ``bucketed`` joined to themselves on
+    ``keys``: one row per (shared bucket, id pair) with a < b.  Output:
+    (keys..., a, <c>_a..., b, <c>_b...) for each ``carry`` column c, so
+    the family's post-filter can read both sides.  Over-cap buckets are
+    never paired (``capped_buckets``)."""
+    kept, _ = capped_buckets(bucketed, keys, max_bucket, id_col)
+
+    def side(s: str) -> DataFrame:
+        return kept.select(
+            F.col(id_col).alias(s), *[F.col(c).alias(f"{c}_{s}") for c in carry], *keys
+        )
+
+    return side("a").join(side("b"), keys).filter(F.col("a") < F.col("b"))
+
+
+def star_edges(
+    bucketed: DataFrame, keys: list[str], max_bucket: int | None, id_col: str = "doc_id"
+) -> DataFrame:
+    """Over-cap buckets as component EDGES instead of pairs: every
+    member links to the bucket's ``keep_id`` (its min id) — O(bucket)
+    rows where pairing would be O(bucket²).  A 10^6-member boilerplate
+    cluster costs 10^6 edge rows here vs 5·10^11 pairs; connected
+    components then treats the whole bucket as one duplicate cluster.
+    Output: (src, dst) with dst = the bucket's min id, src != dst,
+    distinct."""
+    _, giants = capped_buckets(bucketed, keys, max_bucket, id_col)
+    return (
+        bucketed.join(giants.select(*keys, "keep_id"), keys)
+        .filter(F.col(id_col) != F.col("keep_id"))
+        .select(F.col(id_col).alias("src"), F.col("keep_id").alias("dst"))
+        .distinct()
+    )
+
+
+def keep_one(
+    edges: DataFrame, all_ids: DataFrame, id_col: str = "doc_id", iteration_log: list | None = None
+) -> DataFrame:
+    """Connected components over ``edges`` (src, dst), then one row per
+    id of the one-column ``all_ids`` frame: (id, component, keep).  The
+    component is the cluster's min id; ids on no edge are their own
+    component, never dropped; ``keep`` marks each cluster's
+    representative."""
+    comp = connected_components(edges, iteration_log=iteration_log)
+    comp_or_self = F.coalesce(F.col("component"), F.col(id_col))
+    return all_ids.join(comp.withColumnRenamed("node", id_col), id_col, "left").select(
+        id_col,
+        comp_or_self.alias("component"),
+        (comp_or_self == F.col(id_col)).alias("keep"),
+    )
+
+
+BAND_KEYS = ["band_id", "band_hash"]
+
+
 def band_pairs_from_banded(banded: DataFrame, max_bucket: int | None = 1000) -> DataFrame:
     """Pairs from a precomputed (doc_id, band_id, band_hash) frame —
     the shared-scan entry point: a caller wanting pairs AND giant
     buckets computes ``minhash_banded`` once (cache/checkpoint it) and
-    derives both, instead of re-scanning the corpus per output."""
-    kept, _ = capped_buckets(banded, ["band_id", "band_hash"], max_bucket)
-    a = kept.select(F.col("doc_id").alias("a"), "band_id", "band_hash")
-    b = kept.select(F.col("doc_id").alias("b"), "band_id", "band_hash")
+    derives both, instead of re-scanning the corpus per output.
+    Output: (a, b, n_bands_matched) with a < b."""
     return (
-        a.join(b, ["band_id", "band_hash"])
-        .filter(F.col("a") < F.col("b"))
+        capped_pairs(banded, BAND_KEYS, max_bucket)
         .groupBy("a", "b")
         .agg(F.count("*").alias("n_bands_matched"))
     )
@@ -254,28 +335,13 @@ def band_pairs_from_banded(banded: DataFrame, max_bucket: int | None = 1000) -> 
 def giant_buckets_from_banded(banded: DataFrame, max_bucket: int | None = 1000) -> DataFrame:
     """Giant-bucket side output from a precomputed banded frame.
     Output: (band_id, band_hash, n_docs, keep_id)."""
-    _, giants = capped_buckets(banded, ["band_id", "band_hash"], max_bucket)
-    return giants
+    return capped_buckets(banded, BAND_KEYS, max_bucket)[1]
 
 
 def giant_bucket_edges_from_banded(banded: DataFrame, max_bucket: int | None = 1000) -> DataFrame:
-    """Over-cap buckets as component EDGES instead of pairs: every
-    member links to the bucket minimum — O(bucket) rows where pairing
-    would be O(bucket²).  A 10^6-member boilerplate cluster costs 10^6
-    edge rows here vs 5·10^11 pairs; connected components then treats
-    the whole bucket as one duplicate cluster (union with the capped
-    pair edges for the full graph).  Output: (src, dst) with
-    dst = min(doc_id) of the bucket, src != dst, distinct."""
-    _, giants = capped_buckets(banded, ["band_id", "band_hash"], max_bucket)
-    return (
-        banded.join(
-            giants.select("band_id", "band_hash", "keep_id"),
-            ["band_id", "band_hash"],
-        )
-        .filter(F.col("doc_id") != F.col("keep_id"))
-        .select(F.col("doc_id").alias("src"), F.col("keep_id").alias("dst"))
-        .distinct()
-    )
+    """``star_edges`` of the over-cap band buckets (union with the
+    capped pair edges for the full duplicate graph)."""
+    return star_edges(banded, BAND_KEYS, max_bucket)
 
 
 def near_dedup_corpus(
@@ -344,33 +410,19 @@ def near_dedup_from_banded(
     ``all_docs`` must be a one-column (doc_id:long) frame covering
     every doc — docs absent from ``banded`` (too short to shingle)
     come back as keep=true singletons, never silently dropped."""
-    from neuroner_spark.operators.components import connected_components
-
     pairs = band_pairs_from_banded(banded, max_bucket).select(
         F.col("a").alias("src"), F.col("b").alias("dst")
     )
     giant_edges = giant_bucket_edges_from_banded(banded, max_bucket)
-    comp = connected_components(pairs.union(giant_edges), iteration_log=iteration_log)
-    comp_or_self = F.coalesce(F.col("component"), F.col("doc_id"))
-    return all_docs.join(
-        comp.withColumnRenamed("node", "doc_id"), "doc_id", "left"
-    ).select(
-        "doc_id",
-        comp_or_self.alias("component"),
-        (comp_or_self == F.col("doc_id")).alias("keep"),
-    )
+    return keep_one(pairs.union(giant_edges), all_docs, iteration_log=iteration_log)
 
 
 def incremental_near_dedup(
     new_docs: DataFrame,
     corpus_banded: DataFrame,
-    n: int = 3,
-    bands: int = 4,
+    new_banded: DataFrame,
     max_bucket: int | None = 1000,
     id_col: str = "doc_id",
-    text_col: str = "text",
-    fast_hash: bool = False,
-    new_banded: DataFrame | None = None,
     iteration_log: list | None = None,
 ) -> DataFrame:
     """Dedup a NEW batch against an ALREADY-INGESTED corpus without
@@ -400,34 +452,27 @@ def incremental_near_dedup(
     them too.  Doc ids must be globally unique across snapshots (url
     hash at web scale).
 
-    Scale: one scan of the new batch (banded, localCheckpointed), one
-    equi-join against the compact band index (shuffle on band_hash,
-    never on text), components only over the new batch's survivors.
-    The corpus scan is avoided entirely — at 10^12 ingested docs the
-    band index is the only corpus-sized input, and it arrives
-    pre-aggregated (or maintained incrementally as a keyed table).
+    Scale: one scan of the new batch (banded), one equi-join against
+    the compact band index (shuffle on band_hash, never on text),
+    components only over the new batch's survivors.  The corpus scan
+    is avoided entirely — at 10^12 ingested docs the band index is the
+    only corpus-sized input, and it arrives pre-aggregated (or
+    maintained incrementally as a keyed table).
 
-    ``new_banded``: pass the batch's banded frame when the caller has
-    already materialized it (the snapshot store appends the same
-    frame — one scan, not two); it must be the ``minhash_banded``
-    output for exactly ``new_docs`` under the same (n, bands,
-    fast_hash).
+    ``new_banded``: the batch's banded frame, the ``minhash_banded``
+    output for exactly ``new_docs`` under the corpus's (n, bands,
+    fast_hash).  It is read twice (corpus hits, survivors), so pass it
+    materialized (the snapshot store persists it and appends the same
+    frame — one scan, not two).
     """
-    banded_new = (
-        new_banded
-        if new_banded is not None
-        else minhash_banded(new_docs, n, bands, id_col, text_col, fast_hash).localCheckpoint()
-    )
-    band_index = corpus_banded.groupBy("band_id", "band_hash").agg(
-        F.min("doc_id").alias("first_doc")
-    )
+    band_index = corpus_banded.groupBy(*BAND_KEYS).agg(F.min("doc_id").alias("first_doc"))
     hits = (
-        banded_new.join(band_index, ["band_id", "band_hash"])
+        new_banded.join(band_index, BAND_KEYS)
         .groupBy("doc_id")
         .agg(F.min("first_doc").alias("dup_of"))
     )
     all_new = new_docs.select(F.col(id_col).cast("long").alias("doc_id")).distinct()
-    surviving_banded = banded_new.join(hits.select("doc_id"), "doc_id", "left_anti")
+    surviving_banded = new_banded.join(hits.select("doc_id"), "doc_id", "left_anti")
     surv_docs = all_new.join(hits.select("doc_id"), "doc_id", "left_anti")
     within = near_dedup_from_banded(
         surviving_banded, surv_docs, max_bucket, iteration_log=iteration_log
@@ -445,43 +490,6 @@ def incremental_near_dedup(
             .alias("dup_of"),
         )
     )
-
-
-def minhash_band_pairs(
-    docs: DataFrame,
-    n: int = 3,
-    bands: int = 4,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    fast_hash: bool = False,
-    max_bucket: int | None = 1000,
-) -> DataFrame:
-    """MinHash-LSH candidate pairs: equi-join on (band_id, band_hash).
-    Output: (a, b, n_bands_matched) with a < b.
-
-    Buckets larger than ``max_bucket`` are NOT paired (quadratic
-    blow-up guard — see ``capped_buckets``); recover them with
-    ``minhash_giant_buckets``, or use ``minhash_banded`` +
-    ``band_pairs_from_banded``/``giant_buckets_from_banded`` to derive
-    both from ONE corpus scan."""
-    banded = minhash_banded(docs, n, bands, id_col, text_col, fast_hash)
-    return band_pairs_from_banded(banded, max_bucket)
-
-
-def minhash_giant_buckets(
-    docs: DataFrame,
-    n: int = 3,
-    bands: int = 4,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    fast_hash: bool = False,
-    max_bucket: int | None = 1000,
-) -> DataFrame:
-    """Side output for ``minhash_band_pairs``' cap: the over-cap
-    buckets as whole duplicate clusters.
-    Output: (band_id, band_hash, n_docs, keep_id)."""
-    banded = minhash_banded(docs, n, bands, id_col, text_col, fast_hash)
-    return giant_buckets_from_banded(banded, max_bucket)
 
 
 def simhash(docs: DataFrame, bits: int = 16, id_col: str = "doc_id", text_col: str = "text", fast_hash: bool = False) -> DataFrame:
@@ -516,7 +524,7 @@ def simhash(docs: DataFrame, bits: int = 16, id_col: str = "doc_id", text_col: s
         # shiftleft(1L, b) instead of a python 1 << b literal: bit 63
         # wraps to Long.MIN_VALUE JVM-side (two's complement), where
         # the python int literal would overflow lit(); identical for
-        # b <= 62, and it makes bits=64 signatures (simhash_pairs) legal
+        # b <= 62, and it makes bits=64 signatures (Hamming pairing) legal
         sim = sim + F.when(
             F.col(f"_s{b}") > 0, F.expr(f"shiftleft(1L, {b})")
         ).otherwise(F.lit(0).cast("long"))
@@ -533,25 +541,22 @@ def simhash_buckets(docs: DataFrame, bits: int = 16, id_col: str = "doc_id", tex
     )
 
 
-def simhash_blocked(
-    docs: DataFrame,
-    bits: int = 64,
-    max_hamming: int = 3,
-    n_blocks: int | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    fast_hash: bool = False,
+BLOCK_KEYS = ["block_id", "block_val"]
+
+
+def blocked_from_signatures(
+    sig: DataFrame, bits: int = 64, max_hamming: int = 3, n_blocks: int | None = None
 ) -> DataFrame:
-    """Signature + pigeonhole table keys for Hamming-distance pairing
-    (Manku, Jain & Sarma, WWW 2007 "Detecting near-duplicates for web
-    crawling" §3).  Split the b-bit signature into ``n_blocks``
-    disjoint blocks; d flipped bits touch at most d blocks, so two
-    signatures within Hamming distance d agree exactly on SOME
-    (n_blocks - d)-subset of blocks — one table per subset, keyed on
-    that subset's concatenated values, catches every such pair via an
-    equi-join.  Never an all-pairs comparison, and hash-key collisions
-    can only ADD candidates (the exact bit_count verify removes them),
-    so recall stays 1.0 within the bucket cap.
+    """Pigeonhole table keys for Hamming-distance pairing over a
+    (doc_id, simhash) frame (Manku, Jain & Sarma, WWW 2007 "Detecting
+    near-duplicates for web crawling" §3).  Split the b-bit signature
+    into ``n_blocks`` disjoint blocks; d flipped bits touch at most d
+    blocks, so two signatures within Hamming distance d agree exactly
+    on SOME (n_blocks - d)-subset of blocks — one table per subset,
+    keyed on that subset's concatenated values, catches every such
+    pair via an equi-join.  Never an all-pairs comparison, and
+    hash-key collisions can only ADD candidates (the exact bit_count
+    verify removes them), so recall stays 1.0 within the bucket cap.
 
     Sizing (the 100x-scale knob): effective key width is
     (n_blocks - d) * bits / n_blocks bits.  The default
@@ -563,20 +568,11 @@ def simhash_blocked(
     actual operating point (§3.1.1).  Table count is guarded at 64.
 
     This is the shared-scan frame (like ``minhash_banded``): compute
-    once, derive pairs AND the giant-block side output from it.
-    Output: (doc_id, simhash, block_id, block_val) — block_id numbers
-    the table (block subset), block_val is the table key."""
-    sig = simhash(docs, bits, id_col, text_col, fast_hash)
-    return blocked_from_signatures(sig, bits, max_hamming, n_blocks)
-
-
-def blocked_from_signatures(
-    sig: DataFrame, bits: int = 64, max_hamming: int = 3, n_blocks: int | None = None
-) -> DataFrame:
-    """The table-key half of ``simhash_blocked``, over a precomputed
-    (doc_id, simhash) frame — the entry point when signatures are
-    already materialized (``simhash_near_dedup`` checkpoints them
-    once and derives everything downstream)."""
+    once from ``simhash`` signatures (``simhash_near_dedup``
+    checkpoints them), derive pairs AND the giant-block side output
+    from it.  Output: (doc_id, simhash, block_id, block_val) —
+    block_id numbers the table (block subset), block_val is the table
+    key."""
     import itertools
     import math
 
@@ -622,42 +618,21 @@ def simhash_pairs_from_blocked(
     block equi-join generates candidates (bounded by ``max_bucket``
     per block value, same hot-key discipline as every pairing path in
     this module — over-cap blocks surface via
-    ``capped_buckets(blocked, ["block_id", "block_val"], max_bucket)``),
+    ``capped_buckets(blocked, BLOCK_KEYS, max_bucket)``),
     then ONE exact bit_count(a XOR b) <= d filter verifies.  Within
     the cap, recall is 1.0 by the pigeonhole construction and
     precision is exact — no estimation anywhere.
     Output: (a, b, hamming), a < b, distinct."""
-    kept, _ = capped_buckets(blocked, ["block_id", "block_val"], max_bucket)
-    a = kept.select(F.col("doc_id").alias("a"), F.col("simhash").alias("sim_a"), "block_id", "block_val")
-    b = kept.select(F.col("doc_id").alias("b"), F.col("simhash").alias("sim_b"), "block_id", "block_val")
     return (
-        a.join(b, ["block_id", "block_val"])
-        .filter(F.col("a") < F.col("b"))
+        capped_pairs(blocked, BLOCK_KEYS, max_bucket, carry=("simhash",))
         .select(
             "a",
             "b",
-            F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b"))).alias("hamming"),
+            F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))).alias("hamming"),
         )
         .filter(F.col("hamming") <= max_hamming)
         .distinct()
     )
-
-
-def simhash_pairs(
-    docs: DataFrame,
-    bits: int = 64,
-    max_hamming: int = 3,
-    n_blocks: int | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    fast_hash: bool = False,
-    max_bucket: int | None = 1000,
-) -> DataFrame:
-    """One-call form: ``simhash_blocked`` -> ``simhash_pairs_from_blocked``.
-    A pipeline wanting pairs AND giant blocks should materialize the
-    blocked frame once instead (shared-scan pattern)."""
-    blocked = simhash_blocked(docs, bits, max_hamming, n_blocks, id_col, text_col, fast_hash)
-    return simhash_pairs_from_blocked(blocked, max_hamming, max_bucket)
 
 
 def simhash_near_dedup(
@@ -710,8 +685,6 @@ def simhash_near_dedup(
     on signatures anyway.
 
     Output: (doc_id, component, keep)."""
-    from neuroner_spark.operators.components import connected_components
-
     sig = (
         signatures
         if signatures is not None
@@ -728,17 +701,9 @@ def simhash_near_dedup(
     pairs = simhash_pairs_from_blocked(blocked, max_hamming, max_bucket).select(
         F.col("a").alias("src"), F.col("b").alias("dst")
     )
-    comp = connected_components(pairs.union(pile_edges), iteration_log=iteration_log)
-    comp_or_self = F.coalesce(F.col("component"), F.col("doc_id"))
     if all_docs is None:
         all_docs = docs.select(F.col(id_col).alias("doc_id")).distinct()
-    return all_docs.join(
-        comp.withColumnRenamed("node", "doc_id"), "doc_id", "left"
-    ).select(
-        "doc_id",
-        comp_or_self.alias("component"),
-        (comp_or_self == F.col("doc_id")).alias("keep"),
-    )
+    return keep_one(pairs.union(pile_edges), all_docs, iteration_log=iteration_log)
 
 
 def simhash_giant_blocks(
@@ -759,8 +724,7 @@ def simhash_giant_blocks(
     blocked = blocked_from_signatures(
         piles.select("doc_id", "simhash"), bits, max_hamming, n_blocks
     )
-    _, giants = capped_buckets(blocked, ["block_id", "block_val"], max_bucket)
-    return giants
+    return capped_buckets(blocked, BLOCK_KEYS, max_bucket)[1]
 
 
 def winnowing_fingerprints(
@@ -853,28 +817,14 @@ def winnow_components_from_fps(
     every doc — docs absent from ``fps`` (shorter than k chars) come
     back as keep=true singletons, never silently dropped.
     Output: (doc_id, component, keep)."""
-    from neuroner_spark.operators.components import connected_components
-
-    kept, _ = capped_buckets(fps, ["fp"], max_bucket)
-    a = kept.select(F.col("doc_id").alias("a"), "fp")
-    b = kept.select(F.col("doc_id").alias("b"), "fp")
     pairs = (
-        a.join(b, "fp")
-        .filter(F.col("a") < F.col("b"))
+        capped_pairs(fps, ["fp"], max_bucket)
         .groupBy("a", "b")
         .agg(F.count("*").alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
         .select(F.col("a").alias("src"), F.col("b").alias("dst"))
     )
-    comp = connected_components(pairs, iteration_log=iteration_log)
-    comp_or_self = F.coalesce(F.col("component"), F.col("doc_id"))
-    return all_docs.join(
-        comp.withColumnRenamed("node", "doc_id"), "doc_id", "left"
-    ).select(
-        "doc_id",
-        comp_or_self.alias("component"),
-        (comp_or_self == F.col("doc_id")).alias("keep"),
-    )
+    return keep_one(pairs, all_docs, iteration_log=iteration_log)
 
 
 def winnow_giant_fps(fps: DataFrame, max_bucket: int | None = 1000) -> DataFrame:
@@ -883,8 +833,7 @@ def winnow_giant_fps(fps: DataFrame, max_bucket: int | None = 1000) -> DataFrame
     ``winnow_components_from_fps`` DROPS as common-phrase noise (see
     its docstring for why they are dropped, not star-edged).
     Output: (fp, n_docs, keep_id)."""
-    _, giants = capped_buckets(fps, ["fp"], max_bucket)
-    return giants
+    return capped_buckets(fps, ["fp"], max_bucket)[1]
 
 
 def benchmark_contamination(

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from neuroner_spark.operators.dedup import capped_buckets, capped_pairs, keep_one, star_edges
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -174,6 +176,20 @@ def lsh_all_signatures(embeddings: DataFrame, n_planes: int = 8, dim: int = 64, 
     return sigs
 
 
+def _cosine_verified(cand: DataFrame, embeddings: DataFrame, min_cos: float) -> DataFrame:
+    """Exact-cosine verify of candidate (a, b) pairs: (a, b, cos_sim)
+    with cos_sim >= ``min_cos``, rounded for cross-engine parity."""
+    emb = embeddings.select("vec_id", "embedding")
+    ea = emb.select(F.col("vec_id").alias("a"), F.col("embedding").alias("emb_a"))
+    eb = emb.select(F.col("vec_id").alias("b"), F.col("embedding").alias("emb_b"))
+    return (
+        cand.join(ea, "a")
+        .join(eb, "b")
+        .select("a", "b", F.round(cosine(F.col("emb_a"), F.col("emb_b")), 6).alias("cos_sim"))
+        .filter(F.col("cos_sim") >= min_cos)
+    )
+
+
 def lsh_bucket_pairs(
     embeddings: DataFrame,
     n_planes: int = 8,
@@ -191,54 +207,26 @@ def lsh_bucket_pairs(
     Buckets larger than ``max_bucket`` are NOT paired — pairing is
     quadratic in bucket size, and a boilerplate near-dup cluster of
     10^6 vectors would otherwise emit 10^11 pairs from one bucket.
-    Recover over-cap buckets (each IS a near-dup cluster) with
-    ``lsh_giant_buckets``, or share one signature scan via
-    ``lsh_all_signatures`` + the ``*_from_signatures`` forms."""
-    emb = embeddings.select("vec_id", "embedding")
+    Recover over-cap buckets (each IS a near-dup cluster) by sharing
+    one signature scan: ``lsh_all_signatures`` +
+    ``lsh_giants_from_signatures``."""
     sigs = lsh_all_signatures(embeddings, n_planes, dim, n_tables)
-    cand = lsh_pairs_from_signatures(sigs, max_bucket)
-    ea = emb.select(F.col("vec_id").alias("a"), F.col("embedding").alias("emb_a"))
-    eb = emb.select(F.col("vec_id").alias("b"), F.col("embedding").alias("emb_b"))
-    return (
-        cand.join(ea, "a")
-        .join(eb, "b")
-        .select("a", "b", F.round(cosine(F.col("emb_a"), F.col("emb_b")), 6).alias("cos_sim"))
-        .filter(F.col("cos_sim") >= min_cos)
-    )
+    return _cosine_verified(lsh_pairs_from_signatures(sigs, max_bucket), embeddings, min_cos)
+
+
+LSH_KEYS = ["table", "sig"]
 
 
 def lsh_pairs_from_signatures(sigs: DataFrame, max_bucket: int | None = 1000) -> DataFrame:
     """Distinct candidate (a, b) pairs from a precomputed
     (vec_id, table, sig) frame, hot buckets capped."""
-    from neuroner_spark.operators.dedup import capped_buckets
-
-    kept, _ = capped_buckets(sigs, ["table", "sig"], max_bucket, id_col="vec_id")
-    a = kept.select(F.col("vec_id").alias("a"), "table", "sig")
-    b = kept.select(F.col("vec_id").alias("b"), "table", "sig")
-    return a.join(b, ["table", "sig"]).filter(F.col("a") < F.col("b")).select("a", "b").distinct()
+    return capped_pairs(sigs, LSH_KEYS, max_bucket, id_col="vec_id").select("a", "b").distinct()
 
 
 def lsh_giants_from_signatures(sigs: DataFrame, max_bucket: int | None = 1000) -> DataFrame:
     """Giant-bucket side output from a precomputed signature frame.
     Output: (table, sig, n_docs, keep_id)."""
-    from neuroner_spark.operators.dedup import capped_buckets
-
-    _, giants = capped_buckets(sigs, ["table", "sig"], max_bucket, id_col="vec_id")
-    return giants
-
-
-def lsh_giant_buckets(
-    embeddings: DataFrame,
-    n_planes: int = 8,
-    dim: int = 64,
-    n_tables: int = 4,
-    max_bucket: int | None = 1000,
-) -> DataFrame:
-    """Side output for ``lsh_bucket_pairs``' cap: the over-cap buckets
-    as whole near-dup clusters.
-    Output: (table, sig, n_docs, keep_id)."""
-    sigs = lsh_all_signatures(embeddings, n_planes, dim, n_tables)
-    return lsh_giants_from_signatures(sigs, max_bucket)
+    return capped_buckets(sigs, LSH_KEYS, max_bucket, id_col="vec_id")[1]
 
 
 def embedding_blocked_pairs(
@@ -257,8 +245,10 @@ def embedding_blocked_pairs(
     ``embedding_giant_blocks`` and belong on the LSH/components path
     (``near_dedup_vectors``), which handles them linearly.
     Output: (block_col, a, b, cos_sim) with a < b, cos >= min_cos."""
-    from neuroner_spark.operators.dedup import capped_buckets
-
+    # not ``capped_pairs``: capping the narrow (vec_id, block) frame and
+    # semi-joining the vectors back is this declared query's plan; the
+    # kernel form carries the vectors through the cap and plans one
+    # exchange fewer (3 vs 4 at sf0.01), a plan change of its own
     narrow = embeddings.select("vec_id", block_col, "embedding")
     kept, _ = capped_buckets(
         narrow.select("vec_id", block_col), [block_col], max_block, id_col="vec_id"
@@ -280,12 +270,9 @@ def embedding_giant_blocks(
 ) -> DataFrame:
     """Side output for ``embedding_blocked_pairs``' cap: the over-cap
     blocks.  Output: (block_col, n_docs, keep_id)."""
-    from neuroner_spark.operators.dedup import capped_buckets
-
-    _, giants = capped_buckets(
+    return capped_buckets(
         embeddings.select("vec_id", block_col), [block_col], max_block, id_col="vec_id"
-    )
-    return giants
+    )[1]
 
 
 def near_dedup_vectors(
@@ -306,36 +293,13 @@ def near_dedup_vectors(
     buckets skip the cosine verification (an over-cap bucket is by
     construction a near-identical pile; verifying 10^6 members
     pairwise is the exact quadratic this path exists to avoid)."""
-    from neuroner_spark.operators.components import connected_components
-
     sigs = lsh_all_signatures(embeddings, n_planes, dim, n_tables).localCheckpoint()
-    emb = embeddings.select("vec_id", "embedding")
-    cand = lsh_pairs_from_signatures(sigs, max_bucket)
-    ea = emb.select(F.col("vec_id").alias("a"), F.col("embedding").alias("emb_a"))
-    eb = emb.select(F.col("vec_id").alias("b"), F.col("embedding").alias("emb_b"))
-    pairs = (
-        cand.join(ea, "a")
-        .join(eb, "b")
-        .filter(F.round(cosine(F.col("emb_a"), F.col("emb_b")), 6) >= min_cos)
-        .select(F.col("a").alias("src"), F.col("b").alias("dst"))
-    )
-    giants = lsh_giants_from_signatures(sigs, max_bucket)
-    giant_edges = (
-        sigs.join(giants.select("table", "sig", "keep_id"), ["table", "sig"])
-        .filter(F.col("vec_id") != F.col("keep_id"))
-        .select(F.col("vec_id").alias("src"), F.col("keep_id").alias("dst"))
-        .distinct()
-    )
-    comp = connected_components(pairs.union(giant_edges))
+    pairs = _cosine_verified(
+        lsh_pairs_from_signatures(sigs, max_bucket), embeddings, min_cos
+    ).select(F.col("a").alias("src"), F.col("b").alias("dst"))
+    giant_edges = star_edges(sigs, LSH_KEYS, max_bucket, id_col="vec_id")
     all_vecs = embeddings.select(F.col("vec_id").cast("long")).distinct()
-    comp_or_self = F.coalesce(F.col("component"), F.col("vec_id"))
-    return all_vecs.join(
-        comp.withColumnRenamed("node", "vec_id"), "vec_id", "left"
-    ).select(
-        "vec_id",
-        comp_or_self.alias("component"),
-        (comp_or_self == F.col("vec_id")).alias("keep"),
-    )
+    return keep_one(pairs.union(giant_edges), all_vecs, id_col="vec_id")
 
 
 # --- IVF-PQ: product-quantized ANN (Jegou, Douze, Schmid, "Product

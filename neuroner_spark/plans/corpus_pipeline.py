@@ -564,13 +564,9 @@ def run_incremental_snapshot(
         decided = incremental_near_dedup(
             new_docs,
             corpus_banded,
-            n=n,
-            bands=bands,
+            banded_new,
             max_bucket=max_bucket,
             id_col=id_col,
-            text_col=text_col,
-            fast_hash=fast_hash,
-            new_banded=banded_new,
             iteration_log=iteration_log,
         )
         decisions = write_table(decided, os.path.join(store_dir, "decisions", part))
@@ -578,7 +574,6 @@ def run_incremental_snapshot(
         write_table(
             banded_new.join(F.broadcast(kept_ids), "doc_id", "left_semi"),
             os.path.join(store_dir, "bands", part),
-            read_back=False,
         )
     finally:
         release(banded_new)

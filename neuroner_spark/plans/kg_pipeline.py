@@ -865,17 +865,19 @@ def rekey_triples(triples: DataFrame, superseded: DataFrame) -> DataFrame:
     return t.filter(F.col("subj") != F.col("obj")).distinct()
 
 
-def _resolved_superseded(spark: SparkSession, canon_store: str) -> DataFrame | None:
-    """Union every snapshot's superseded partition and path-compress
-    driver-side (the chain old -> mid -> new must resolve to old ->
-    new for a single-join re-key).  The table is merge-retirement-
-    sized — tiny by construction — so the collect is bounded."""
+def rekeyed_view(spark: SparkSession, triples: DataFrame, canon_store: str) -> DataFrame:
+    """``triples`` re-keyed through the canonical store's CUMULATIVE
+    superseded chain — the read-time view of both triple stores
+    (``read_kg_triples`` and streaming ``read_streaming_triples``).
+    Every snapshot's superseded partition is unioned and
+    path-compressed driver-side (the chain old -> mid -> new must
+    resolve to old -> new for a single-join re-key); the table is
+    merge-retirement-sized — tiny by construction — so the collect is
+    bounded.  With no retired id the triples come back as they are."""
     parts = [p for _sid, p in partitions(os.path.join(canon_store, "superseded"), "snapshot")]
-    if not parts:
-        return None
-    rows = read_table(spark, *parts).collect()
+    rows = read_table(spark, *parts).collect() if parts else []
     if not rows:
-        return None
+        return triples
     nxt = {int(r["old_canonical_id"]): int(r["canonical_id"]) for r in rows}
 
     def final(x: int) -> int:
@@ -886,27 +888,27 @@ def _resolved_superseded(spark: SparkSession, canon_store: str) -> DataFrame | N
         return x
 
     resolved = [(o, final(o)) for o in nxt]
-    return local_df(spark, resolved, "old_canonical_id long, canonical_id long")
+    return rekey_triples(
+        triples, local_df(spark, resolved, "old_canonical_id long, canonical_id long")
+    )
 
 
 def read_kg_triples(spark: SparkSession, store_dir: str) -> DataFrame:
     """Consistent view over the append-only triple store: the union of
     every snapshot partition, re-keyed through the CUMULATIVE resolved
-    superseded table at read time.  Writes stay append-only (each
-    snapshot's partition is never rewritten — the audit record), yet
-    every read sees current canonical ids; materialize the view
-    periodically if read amplification matters."""
+    superseded table at read time (``rekeyed_view``).  Writes stay
+    append-only (each snapshot's partition is never rewritten — the
+    audit record), yet every read sees current canonical ids;
+    materialize the view periodically if read amplification matters."""
     root = os.path.join(store_dir, "triples")
     parts = [p for _sid, p in partitions(root, "snapshot")]
     if not parts:
         raise FileNotFoundError(
             f"no triple snapshots under {root} — run run_incremental_kg first"
         )
-    triples = read_table(spark, *parts)
-    resolved = _resolved_superseded(spark, os.path.join(store_dir, "canonical"))
-    if resolved is None:
-        return triples
-    return rekey_triples(triples, resolved)
+    return rekeyed_view(
+        spark, read_table(spark, *parts), os.path.join(store_dir, "canonical")
+    )
 
 
 def near_dup_decisions(

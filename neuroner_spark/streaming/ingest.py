@@ -256,9 +256,7 @@ def run_streaming_pipeline(
                 rejects = gated.filter(F.col("_reject_reason").isNotNull()).select(
                     "url", "warc_ts", "lang", F.col("_reject_reason").alias("reject_reason")
                 )
-                write_table(
-                    rejects, os.path.join(rejects_dir, f"batch_id={batch_id}"), read_back=False
-                )
+                write_table(rejects, os.path.join(rejects_dir, f"batch_id={batch_id}"))
             batch_df = gated.filter(F.col("_reject_reason").isNull()).drop(
                 "_quality", "_contaminated", "_reject_reason"
             )
@@ -309,13 +307,6 @@ def read_streaming_triples(
     retirement table is merge-sized (broadcast in ``rekey_triples``),
     so the view adds no shuffle over the store scan."""
     from neuroner_spark.io import read_table
-    from neuroner_spark.plans.kg_pipeline import (
-        _resolved_superseded,
-        rekey_triples,
-    )
+    from neuroner_spark.plans.kg_pipeline import rekeyed_view
 
-    triples = read_table(spark, out_dir)
-    resolved = _resolved_superseded(spark, canonical_store_dir)
-    if resolved is None:
-        return triples
-    return rekey_triples(triples, resolved)
+    return rekeyed_view(spark, read_table(spark, out_dir), canonical_store_dir)

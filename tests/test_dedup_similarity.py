@@ -3,6 +3,7 @@ pair generators must FIND planted near-duplicates and must not go
 quadratic (candidates only from key collisions)."""
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 BASE = (
@@ -46,11 +47,11 @@ def test_jaccard_finds_near_dups(spark):
 
 
 def test_minhash_bands_catch_near_dups(spark):
-    from neuroner_spark.operators.dedup import minhash_band_pairs
+    from neuroner_spark.operators.dedup import band_pairs_from_banded, minhash_banded
 
     pairs = {
         (r["a"], r["b"]): r["n_bands_matched"]
-        for r in minhash_band_pairs(_docs(spark), n=3, bands=4).collect()
+        for r in band_pairs_from_banded(minhash_banded(_docs(spark), n=3, bands=4)).collect()
     }
     assert pairs[(0, 1)] == 4  # identical docs share every band
     assert (0, 2) in pairs  # near dup caught by at least one band
@@ -123,7 +124,8 @@ def test_fast_hash_path_equivalent_behavior(spark):
     import time
 
     from neuroner_spark.operators.dedup import (
-        minhash_band_pairs,
+        band_pairs_from_banded,
+        minhash_banded,
         ngram_jaccard_pairs,
         simhash_buckets,
     )
@@ -134,8 +136,11 @@ def test_fast_hash_path_equivalent_behavior(spark):
     # Jaccard over shingle SETS: identical pairs AND identical values
     assert slow_pairs == fast_pairs and len(fast_pairs) > 0
 
-    slow_band = {(r["a"], r["b"]) for r in minhash_band_pairs(docs).collect()}
-    fast_band = {(r["a"], r["b"]) for r in minhash_band_pairs(docs, fast_hash=True).collect()}
+    slow_band = {(r["a"], r["b"]) for r in band_pairs_from_banded(minhash_banded(docs)).collect()}
+    fast_band = {
+        (r["a"], r["b"])
+        for r in band_pairs_from_banded(minhash_banded(docs, fast_hash=True)).collect()
+    }
     # banding is probabilistic per hash family: exact-dup pairs (all 8
     # mins equal) must appear under BOTH families
     exact_dups = {(a, b) for a, b, j in slow_pairs if j == 1.0}
@@ -198,7 +203,11 @@ def test_minhash_hot_bucket_cap_bounds_pairs(spark):
     """A giant duplicate cluster (the web's boilerplate case) must not
     emit quadratic pairs: over-cap band buckets route to the
     giant-bucket side output; small buckets still pair normally."""
-    from neuroner_spark.operators.dedup import minhash_band_pairs, minhash_giant_buckets
+    from neuroner_spark.operators.dedup import (
+        band_pairs_from_banded,
+        giant_buckets_from_banded,
+        minhash_banded,
+    )
 
     n_clones = 3000
     rows = [(i, BASE) for i in range(n_clones)]
@@ -208,23 +217,17 @@ def test_minhash_hot_bucket_cap_bounds_pairs(spark):
         (n_clones + 2, "yet another unrelated document about streams and windows"),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    pairs = minhash_band_pairs(docs, max_bucket=100).collect()
+    pairs = band_pairs_from_banded(minhash_banded(docs), max_bucket=100).collect()
     # uncapped, the clone cluster alone would emit ~n_clones^2/2 = 4.5M pairs
     assert len(pairs) < 100
     # the small exact-dup pair outside the giant cluster still pairs
     assert any(r["a"] == n_clones and r["b"] == n_clones + 1 for r in pairs)
-    giants = minhash_giant_buckets(docs, max_bucket=100).collect()
+    giants = giant_buckets_from_banded(minhash_banded(docs), max_bucket=100).collect()
     assert len(giants) >= 1
     assert all(g["n_docs"] >= n_clones and g["keep_id"] == 0 for g in giants)
     # cap=None restores the uncapped semantics (schema-only empty giants)
-    assert minhash_giant_buckets(docs, max_bucket=None).count() == 0
-    # shared-scan forms: one banded frame serves BOTH outputs
-    from neuroner_spark.operators.dedup import (
-        band_pairs_from_banded,
-        giant_buckets_from_banded,
-        minhash_banded,
-    )
-
+    assert giant_buckets_from_banded(minhash_banded(docs), max_bucket=None).count() == 0
+    # shared-scan forms: one materialized banded frame serves BOTH outputs
     bd = minhash_banded(docs).localCheckpoint()
     assert band_pairs_from_banded(bd, max_bucket=100).count() == len(pairs)
     assert giant_buckets_from_banded(bd, max_bucket=100).count() == len(giants)
@@ -272,14 +275,21 @@ def test_near_dedup_corpus_end_to_end_with_giant_cluster(spark):
     }
 
 
-def test_near_dedup_corpus_invariants_random(spark):
-    """Structural invariants on a random small-vocab corpus (lots of
-    accidental near-dups): exactly one row per doc; component is the
-    min id of its cluster; keep <=> doc_id == component; every
-    component representative keeps itself."""
+@pytest.mark.parametrize("family", ["minhash", "simhash", "winnow"])
+def test_near_dedup_corpus_invariants_random(spark, family):
+    """Structural invariants of every keep-one family (minhash bands,
+    simhash blocks, winnowing fingerprints) on a random small-vocab
+    corpus (lots of accidental near-dups): exactly one row per doc;
+    component is the min id of its cluster; keep <=> doc_id ==
+    component; every component representative keeps itself."""
     import random
 
-    from neuroner_spark.operators.dedup import near_dedup_corpus
+    from neuroner_spark.operators.dedup import (
+        near_dedup_corpus,
+        simhash_near_dedup,
+        winnow_components_from_fps,
+        winnowing_fingerprints,
+    )
 
     rng = random.Random(42)
     vocab = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta", "eta", "theta"]
@@ -288,7 +298,14 @@ def test_near_dedup_corpus_invariants_random(spark):
         for i in range(120)
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    out = near_dedup_corpus(docs, max_bucket=10).collect()
+    keep_one_of = {
+        "minhash": lambda: near_dedup_corpus(docs, max_bucket=10),
+        "simhash": lambda: simhash_near_dedup(docs, max_bucket=10),
+        "winnow": lambda: winnow_components_from_fps(
+            winnowing_fingerprints(docs), docs.select("doc_id"), max_bucket=10
+        ),
+    }
+    out = keep_one_of[family]().collect()
     assert len(out) == 120
     assert sorted(r["doc_id"] for r in out) == list(range(120))
     comp = {r["doc_id"]: r["component"] for r in out}
@@ -307,7 +324,11 @@ def test_near_dedup_corpus_invariants_random(spark):
 
 def test_lsh_hot_bucket_cap_bounds_pairs(spark):
     """Same guard on the hyperplane-LSH pair generator."""
-    from neuroner_spark.operators.similarity import lsh_bucket_pairs, lsh_giant_buckets
+    from neuroner_spark.operators.similarity import (
+        lsh_all_signatures,
+        lsh_bucket_pairs,
+        lsh_giants_from_signatures,
+    )
 
     rng = np.random.default_rng(11)
     base = rng.normal(0, 1, 64).astype(np.float32)
@@ -320,7 +341,8 @@ def test_lsh_hot_bucket_cap_bounds_pairs(spark):
     pairs = lsh_bucket_pairs(emb, n_planes=8, dim=64, min_cos=0.9, max_bucket=100).collect()
     assert len(pairs) < 100  # uncapped: ~2M pairs from the clone bucket
     assert any(r["a"] == n_clones and r["b"] == n_clones + 1 for r in pairs)
-    giants = lsh_giant_buckets(emb, n_planes=8, dim=64, max_bucket=100).collect()
+    sigs = lsh_all_signatures(emb, n_planes=8, dim=64)
+    giants = lsh_giants_from_signatures(sigs, max_bucket=100).collect()
     assert len(giants) >= 1
     assert all(g["n_docs"] >= n_clones and g["keep_id"] == 0 for g in giants)
 
@@ -585,7 +607,11 @@ def test_simhash_pairs_match_bruteforce(spark):
     operator's (a, b, hamming) set must EQUAL the brute-force
     all-pairs set at distance <= d — recall 1.0 by construction,
     exact hamming values, including the signed bit-63 path."""
-    from neuroner_spark.operators.dedup import simhash, simhash_pairs
+    from neuroner_spark.operators.dedup import (
+        blocked_from_signatures,
+        simhash,
+        simhash_pairs_from_blocked,
+    )
 
     rng = np.random.default_rng(11)
     vocab = [f"tok{i}" for i in range(500)]
@@ -618,7 +644,9 @@ def test_simhash_pairs_match_bruteforce(spark):
                 expected.add((a, b, h))
     got = {
         (r["a"], r["b"], r["hamming"])
-        for r in simhash_pairs(corpus, bits=64, max_hamming=d).collect()
+        for r in simhash_pairs_from_blocked(
+            blocked_from_signatures(simhash(corpus, bits=64), bits=64, max_hamming=d), d
+        ).collect()
     }
     assert got == expected
     # the exact clone is in there at distance 0
@@ -630,15 +658,16 @@ def test_simhash_pairs_hot_block_cap(spark):
     guard); it surfaces whole in the giant-block side output, while an
     under-cap cluster still pairs through the same blocked frame."""
     from neuroner_spark.operators.dedup import (
+        blocked_from_signatures,
         capped_buckets,
-        simhash_blocked,
+        simhash,
         simhash_pairs_from_blocked,
     )
 
     small = "an unrelated trio document about streaming state and watermarks"
     rows = [(i, BASE) for i in range(20)] + [(100 + i, small) for i in range(3)]
     corpus = spark.createDataFrame(rows, "doc_id long, text string")
-    blocked = simhash_blocked(corpus, bits=64, max_hamming=3)
+    blocked = blocked_from_signatures(simhash(corpus, bits=64), bits=64, max_hamming=3)
     pairs = {
         (r["a"], r["b"]) for r in simhash_pairs_from_blocked(blocked, 3, max_bucket=5).collect()
     }
@@ -655,7 +684,11 @@ def test_simhash_pairs_general_blocks_match_bruteforce(spark):
     d+1-block case — hash-key collisions only ADD candidates and the
     exact verify removes them, so the scheme is exact at ANY block
     count."""
-    from neuroner_spark.operators.dedup import simhash, simhash_pairs
+    from neuroner_spark.operators.dedup import (
+        blocked_from_signatures,
+        simhash,
+        simhash_pairs_from_blocked,
+    )
 
     rng = np.random.default_rng(23)
     vocab = [f"w{i}" for i in range(400)]
@@ -685,16 +718,14 @@ def test_simhash_pairs_general_blocks_match_bruteforce(spark):
     }
     got = {
         (r["a"], r["b"], r["hamming"])
-        for r in simhash_pairs(corpus, bits=64, max_hamming=d, n_blocks=8).collect()
+        for r in simhash_pairs_from_blocked(
+            blocked_from_signatures(simhash(corpus, bits=64), bits=64, max_hamming=d, n_blocks=8), d
+        ).collect()
     }
     assert got == expected
     # table-count guard: C(12, 3) = 220 > 64 must refuse
-    import pytest as _pytest
-
-    from neuroner_spark.operators.dedup import simhash_blocked
-
-    with _pytest.raises(ValueError):
-        simhash_blocked(corpus, bits=64, max_hamming=3, n_blocks=12)
+    with pytest.raises(ValueError):
+        blocked_from_signatures(simhash(corpus, bits=64), bits=64, max_hamming=3, n_blocks=12)
 
 
 def test_simhash_near_dedup_end_to_end(spark):
@@ -859,7 +890,10 @@ def test_incremental_near_dedup_against_signature_store(spark):
         ],
         "doc_id long, text string",
     )
-    out = {r["doc_id"]: r for r in incremental_near_dedup(batch, store).collect()}
+    out = {
+        r["doc_id"]: r
+        for r in incremental_near_dedup(batch, store, minhash_banded(batch)).collect()
+    }
     assert len(out) == 5  # one row per new doc, nothing dropped
     assert out[10]["status"] == "dup_of_corpus" and out[10]["dup_of"] == 0
     assert out[11]["status"] == "dup_of_corpus" and out[11]["dup_of"] == 0
@@ -874,7 +908,7 @@ def test_incremental_near_dedup_against_signature_store(spark):
         minhash_banded(batch.filter(F.col("doc_id").isin(kept_ids)))
     )
     nxt = spark.createDataFrame([(20, fresh)], "doc_id long, text string")
-    out2 = incremental_near_dedup(nxt, store2).collect()
+    out2 = incremental_near_dedup(nxt, store2, minhash_banded(nxt)).collect()
     assert len(out2) == 1
     assert out2[0]["status"] == "dup_of_corpus" and out2[0]["dup_of"] == 12
 
@@ -911,7 +945,12 @@ def test_incremental_near_dedup_short_docs_kept(spark):
         [(10, "tiny"), (11, ""), (12, BASE)],
         "doc_id long, text string",
     )
-    out = {r["doc_id"]: r for r in incremental_near_dedup(batch, minhash_banded(corpus)).collect()}
+    out = {
+        r["doc_id"]: r
+        for r in incremental_near_dedup(
+            batch, minhash_banded(corpus), minhash_banded(batch)
+        ).collect()
+    }
     assert len(out) == 3
     assert out[10]["status"] == "kept" and out[11]["status"] == "kept"
     assert out[12]["status"] == "dup_of_corpus" and out[12]["dup_of"] == 0

@@ -129,3 +129,42 @@ def test_kg_triples_executed_doc_keyed_shuffles(spark):
     doc_shuffles = [l for l in final.splitlines() if "Exchange hashpartitioning(doc_id" in l]
     ran = [l for l in doc_shuffles if "ReusedExchange" not in l]
     assert (len(ran), len(doc_shuffles) - len(ran)) == (2, 3), final
+
+
+def test_band_edges_executed_shuffles(spark):
+    """Pin the exchanges the dedup gate's edge set really runs: capped
+    band pairs as (src, dst) union the over-cap buckets' star edges,
+    over one materialized banded frame (``near_dedup_from_banded``'s
+    input to connected components), read from the final adaptive plan
+    after the action.  300 random docs over a 4-word vocabulary leave
+    18 buckets over the cap of 5, so both sides are non-empty.
+
+    8 exchanges run: the banded rows by bucket key, the pair side's
+    sizes aggregation and its broadcast, the b-side broadcast and the
+    pairs' distinct; the giants side runs its OWN sizes aggregation
+    (count and min id, where the pair side prunes to the count), the
+    broadcast of its banded rows and the star edges' distinct.  3 are
+    reused: the bucket-keyed banded rows twice and the within-cap key
+    broadcast once."""
+    import random
+
+    from neuroner_spark.operators.dedup import (
+        band_pairs_from_banded,
+        giant_bucket_edges_from_banded,
+        minhash_banded,
+    )
+    from neuroner_spark.session import release
+
+    rng = random.Random(7)
+    vocab = ["alpha", "beta", "gamma", "delta"]
+    rows = [(i, " ".join(rng.choice(vocab) for _ in range(rng.randint(3, 8)))) for i in range(300)]
+    banded = minhash_banded(spark.createDataFrame(rows, "doc_id long, text string")).localCheckpoint()
+    pairs = band_pairs_from_banded(banded, 5).select(F.col("a").alias("src"), F.col("b").alias("dst"))
+    edges = pairs.union(giant_bucket_edges_from_banded(banded, 5))
+    assert edges.collect()
+    final = _plan(edges).split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final
+    exchanges = [l for l in final.splitlines() if "Exchange" in l]
+    reused = [l for l in exchanges if "ReusedExchange" in l]
+    assert (len(exchanges) - len(reused), len(reused)) == (8, 3), final
+    release(banded)

@@ -203,6 +203,34 @@ def test_local_df_null_bearing_long_keeps_every_bit(spark):
     assert sorted(got.collect(), key=lambda r: r["tag"]) == [(big, "x"), (None, "y")]
 
 
+def test_write_table_read_back_runs_no_job(spark, tmp_path):
+    """``io.write_table`` reads its partition back with the written
+    frame's schema: it runs the jobs of a plain write and no more (a
+    schema inferred from the files would cost one), and the frame it
+    returns has the schema ``spark.read.parquet`` infers there."""
+    from neuroner_spark.io import write_table
+
+    df = spark.range(6).select(
+        "id", (F.col("id") * 2).cast("int").alias("x"), F.lit("t").alias("s")
+    )
+    sc = spark.sparkContext
+
+    def n_jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    _, plain = n_jobs("plain_write", lambda: df.write.parquet(str(tmp_path / "plain")))
+    path = str(tmp_path / "t")
+    out, written = n_jobs("write_table", lambda: write_table(df, path))
+    assert written == plain
+    assert out.schema == spark.read.parquet(path).schema
+    assert sorted(out.collect()) == sorted(df.collect())
+
+
 def test_tokenize_ascii_vector_path_parity(spark):
     """The r7 batch-vectorized ASCII tokenizer path must emit exactly
     the reference ``tokenize_text`` rows — across edge chars, empty
